@@ -2,21 +2,14 @@ package graft
 
 import java.io.{File, PrintWriter}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps `explain("formatted")` for every registered query — the plan-review
   * loop behind SCALE.md. Usage: ExplainAudit [sfDir] [outFile]. */
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outFile = args.lift(1).getOrElse("/tmp/plans.txt")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local()
     spark.sparkContext.setLogLevel("ERROR")
-    Tables.configure(spark)
     val pw = new PrintWriter(new File(outFile))
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       pw.println(s"\n=================== $name ===================")

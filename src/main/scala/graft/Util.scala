@@ -32,10 +32,10 @@ object Util {
     Option(e.getCondition).exists(c =>
       c.startsWith("PATH_NOT_FOUND") || c.startsWith("UNABLE_TO_INFER_SCHEMA"))
 
-  /** Shared measurement-JSON persistence for the diagnostic mains (Bench /
-    * ScaleStress / RecallProbe): stdout tails get truncated by the driver's
-    * bounded capture, a file does not. `envVar` overrides `defaultPath`;
-    * failure to write is a warning, never a run failure. */
+  /** Shared measurement-JSON persistence for [[Bench]] and [[Tools]]:
+    * stdout tails get truncated by a bounded capture, a file does not.
+    * `envVar` overrides `defaultPath`; failure to write is a warning,
+    * never a run failure. */
   def writeJson(envVar: String, defaultPath: String, json: String): Unit = {
     val outPath = sys.env.getOrElse(envVar, defaultPath)
     try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),

@@ -1,6 +1,6 @@
 package graft.apps
 
-import graft.GraftConfig
+import graft.{GraftConfig, Sessions}
 import graft.llm.Dedup
 import graft.streaming.CorpusIngest
 import org.apache.spark.sql.SparkSession
@@ -68,11 +68,6 @@ object CurationJob {
 
   def main(args: Array[String]): Unit = {
     val conf = GraftConfig.load(args)
-    val spark = SparkSession.builder()
-      .appName("graft-curation")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    start(spark, conf).awaitTermination()
+    start(Sessions.cluster("graft-curation"), conf).awaitTermination()
   }
 }

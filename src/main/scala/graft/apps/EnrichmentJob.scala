@@ -1,9 +1,8 @@
 package graft.apps
 
-import graft.GraftConfig
+import graft.{GraftConfig, Sessions}
 import graft.sources.JdbcDim
 import graft.streaming.CdrStreamJob
-import org.apache.spark.sql.SparkSession
 
 /** Production enrichment application — the reference's
   * `EnrichmentAppWithoutExplode.main` (EnrichmentAppWithoutExplode.java:36-56)
@@ -61,11 +60,7 @@ object EnrichmentJob {
 
   def main(args: Array[String]): Unit = {
     val conf = GraftConfig.load(args)
-    val spark = SparkSession.builder()
-      .appName("graft-enrichment")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val spark = Sessions.cluster("graft-enrichment")
 
     val src = CdrStreamJob.kafkaSource(
       spark,

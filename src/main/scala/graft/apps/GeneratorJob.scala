@@ -1,8 +1,7 @@
 package graft.apps
 
-import graft.GraftConfig
+import graft.{GraftConfig, Sessions}
 import graft.streaming.CdrStreamJob
-import org.apache.spark.sql.SparkSession
 
 /** Synthetic CDR generator application — the reference's `Generator.main`
   * (generator/Generator.java:25-69): rate-limited synthetic CDRs encoded as
@@ -17,10 +16,7 @@ object GeneratorJob {
 
   def main(args: Array[String]): Unit = {
     val conf = GraftConfig.load(args)
-    val spark = SparkSession.builder()
-      .appName("graft-generator")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = Sessions.cluster("graft-generator")
 
     val cdrs = CdrStreamJob.rateGenerator(
       spark, conf.getLong("generator.rowsPerSecond", 10L).toInt)

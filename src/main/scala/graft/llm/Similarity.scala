@@ -507,7 +507,7 @@ object Similarity {
     * recall target, not index internals. One extra corpus count() at
     * index-build time buys the sizing; at 100 TB that count rides the
     * parquet footer statistics. Gated by [[annRecallEval]] /
-    * `RecallProbe`: the sized defaults must measure ≥ the stated target
+    * `graft.Tools recall`: the sized defaults must measure ≥ the stated target
     * on the fixture before they ship. */
   def ivfSizedTopK(emb: DataFrame, nQueries: Int, k: Int,
                    targetRecall: Double = 0.8, iters: Int = 2): DataFrame = {
@@ -573,7 +573,7 @@ object Similarity {
       assignToCells(e.filter(col("vec_id") >= nQueries), cent),
       k, Seq("cid"))
 
-  /** Diagnostic for [[graft.RecallProbe]]'s cost/recall frontier: the
+  /** Diagnostic for `graft.Tools recall`'s cost/recall frontier: the
     * number of (query, candidate) pairs the IVF probe join actually scores
     * at the given knobs — the measured probe cost the recall is bought at
     * (scan fraction = this / (nQueries × corpus)). */
@@ -760,7 +760,7 @@ object Similarity {
   }
 
   /** Persist a MEASURED recall-at-stored-contract row with the index —
-    * what [[graft.RecallProbe]] writes after measuring a stored index, so
+    * what `graft.Tools recall` writes after measuring a stored index, so
     * [[ivfIndexNeedsRebuild]]/[[ivfPqIndexNeedsRebuild]] can gate on
     * measured drift instead of only the growth-ratio extrapolation.
     * `measuredAtN` is the per-vector part's row count at measurement time

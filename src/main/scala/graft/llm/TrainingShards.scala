@@ -90,9 +90,11 @@ object TrainingShards {
     // next-batch probe + shard-base aggregation in ONE manifest pass
     // (guide §1.2): batch = stored max + 1 makes the explicit form's
     // strictly-before filter keep every row, so its aggregate and the
-    // probe are the same scan
+    // probe are the same scan. A manifest with no rows starts both at the
+    // beginning: batch 1, shard 0.
     val m = newDocs.sparkSession.read.parquet(s"$dir/manifest")
-      .agg(max(col("ingest_batch").cast("long")), max(col("shard"))).head()
+      .agg(max(col("ingest_batch").cast("long")),
+        coalesce(max(col("shard").cast("long")), lit(-1L))).head()
     val batch = if (m.isNullAt(0)) 1L else m.getLong(0) + 1L
     writeShardFiles(newDocs, dir, nShards, shardBase = m.getLong(1) + 1L,
       ingestBatch = batch, dynamic = true)
@@ -149,7 +151,7 @@ object TrainingShards {
     val spark = newDocs.sparkSession
     val base = spark.read.parquet(s"$dir/manifest")
       .filter(col("ingest_batch").cast("long") < ingestBatch)
-      .agg(max(col("shard"))).head().getLong(0) + 1L
+      .agg(coalesce(max(col("shard").cast("long")), lit(-1L))).head().getLong(0) + 1L
     writeShardFiles(newDocs, dir, nShards, shardBase = base,
       ingestBatch = ingestBatch, dynamic = true)
   }
@@ -522,8 +524,8 @@ object TrainingShards {
         (if (hasBounds) Seq(col("bounds")) else Nil): _*)
       .crossJoin(scoped.agg(
         max(col("ingest_batch").cast("long")).as("_max_batch"),
-        max(col("shard")).as("_max_shard"),
-        sum(col("n_docs")).as("_n_stored")))
+        coalesce(max(col("shard").cast("long")), lit(-1L)).as("_max_shard"),
+        coalesce(sum(col("n_docs").cast("long")), lit(0L)).as("_n_stored")))
       .head()
     AppendMeta(
       ingestBatch = ingestBatch.getOrElse(

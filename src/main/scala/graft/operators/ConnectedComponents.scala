@@ -77,7 +77,7 @@ object ConnectedComponents {
   def apply(nodes: DataFrame, edges: DataFrame, maxIter: Int = 50): DataFrame =
     run(nodes, edges, maxIter)._1
 
-  /** [[apply]] plus [[CcStats]] — for tests and ScaleStress. */
+  /** [[apply]] plus [[CcStats]] — for tests and `graft.Tools scale`. */
   def run(
       nodes: DataFrame,
       edges: DataFrame,

@@ -99,4 +99,37 @@ class FixtureSpec extends SparkSpec {
     val e = intercept[FixtureSchemaDrift] { Tables.events(spark, dir) }
     assert(e.getMessage.contains("<column missing>"))
   }
+
+  test("Tools.replicate: factor x rows, disjoint id ranges per copy, copy 0 unchanged, salt only when asked") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, max, min}
+    val factor = 3
+    val ev = Tables.events(spark, sf)
+    val evN = Tools.replicate(ev, factor, Seq("event_id", "user_id"), keepCopy = true)
+    assert(evN.count() == factor * ev.count())
+    Seq("event_id", "user_id").foreach { id =>
+      val ranges = evN.groupBy($"copy").agg(min(col(id)), max(col(id)))
+        .as[(Long, Long, Long)].collect().sortBy(_._1)
+      assert(ranges.map(_._1).toSeq == (0L until factor))
+      ranges.sliding(2).foreach { case Array(a, b) =>
+        assert(a._3 < b._2, s"$id ranges of copies ${a._1} and ${b._1} overlap") }
+    }
+    val copy0 = evN.filter($"copy" === 0).drop("copy")
+    assert(copy0.exceptAll(ev).isEmpty && ev.exceptAll(copy0).isEmpty)
+    assert(Tools.replicate(ev, factor, Seq("event_id")).columns.toSeq == ev.columns.toSeq)
+
+    // each copy's text against its source document's
+    val docs = Tables.documents(spark, sf).select($"doc_id", $"text")
+    val stride = docs.agg(max($"doc_id")).head().getLong(0) + 1
+    def texts(salt: Boolean): Array[(Long, String, String)] =
+      Tools.replicate(docs, factor, Seq("doc_id"), salt = salt, keepCopy = true)
+        .select($"copy", ($"doc_id" - $"copy" * stride).as("doc_id"), $"text".as("got"))
+        .join(docs, "doc_id").select($"copy", $"text", $"got")
+        .as[(Long, String, String)].collect()
+    val salted = texts(salt = true)
+    assert(salted.length == factor * docs.count())
+    salted.foreach { case (c, orig, got) =>
+      assert(got == (if (c == 0) orig else s"$orig c$c"), s"copy $c: '$got'") }
+    assert(texts(salt = false).forall { case (_, orig, got) => got == orig })
+  }
 }

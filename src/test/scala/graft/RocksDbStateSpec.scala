@@ -15,7 +15,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
   * under both providers (flatMapGroupsWithState semantics live above the
   * store), and that RocksDB genuinely engages (progress metrics carry
   * rocksdb counters — a silently-ignored conf would green-wash the claim).
-  * Throughput/state-scale measurements: graft.StreamBench (SCALE.md). */
+  * Throughput/state-scale measurements: `graft.Tools stream` (SCALE.md). */
 class RocksDbStateSpec extends SparkSpec {
   import spark.implicits._
 

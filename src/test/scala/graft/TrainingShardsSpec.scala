@@ -110,6 +110,38 @@ class TrainingShardsSpec extends SparkSpec {
     assert(before == after, "replayed append mutated the store")
   }
 
+  test("append onto a store whose manifest has no rows starts at batch 1, shard 0, pack 0") {
+    // a schema-bearing manifest with zero rows, in place of whatever the
+    // store's build committed
+    def emptyManifest(dir: String): Unit = {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$dir/manifest"))
+      Seq.empty[(Long, Long, Long)].toDF("shard", "n_docs", "n_bytes")
+        .write.parquet(s"$dir/manifest/ingest_batch=0")
+      assert(TrainingShards.readManifest(spark, dir).count() == 0L)
+    }
+    val inc = docs.filter($"doc_id" % 3 === 0)
+    val store = java.nio.file.Files.createTempDirectory("graft-shards-nomf").toString
+    emptyManifest(store)
+    TrainingShards.appendTrainingShards(inc, store, 4)
+    assert(TrainingShards.readManifest(spark, store).select($"shard").as[Long]
+      .collect().sorted.toSeq == (0L until 4L))
+    assert(decoded(store).keys.map(_._3).toSeq.sorted ==
+      inc.select($"doc_id").as[Long].collect().toSeq.sorted)
+
+    val d = Tables.documents(spark, sf)
+    val packed = java.nio.file.Files.createTempDirectory("graft-shards-nomf-pk").toString
+    TrainingShards.writePackedTokenShards(d.filter($"doc_id" % 3 =!= 0), packed, 4, 3, 32)
+    emptyManifest(packed)
+    TrainingShards.appendPackedTokenShards(d.filter($"doc_id" % 3 === 0), packed, 4)
+    val man = spark.read.parquet(s"$packed/manifest")
+      .select($"shard", $"ingest_batch".cast("long")).as[(Long, Long)].collect()
+    assert(man.toSeq.sorted == (0L until 4L).map(_ -> 1L))
+    val packs = TrainingShards.readPackedTokenShards(spark, packed)
+      .select($"pack_seq").as[Long].collect().sorted.toSeq
+    assert(packs.nonEmpty && packs == packs.indices.map(_.toLong),
+      "the first committed packs must be numbered densely from 0")
+  }
+
   test("streaming maintainer: stream of micro-batches == explicit batch appends") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val seed = docs.filter($"doc_id" % 3 === 0)

@@ -717,10 +717,6 @@ object Tools {
       CdrPipeline.dedupLatestAgg(CdrPipeline.rangeEnrich(
         CdrPipeline.explodeIps(CdrPipeline.extendWithPartitionCols(src)
           .filter(col("imsi").isNull)), msIp, "left_outer")).count())
-    val (_, tAgg2) = timed("argmax dedup (agg rpt)")(
-      CdrPipeline.dedupLatestAgg(CdrPipeline.rangeEnrich(
-        CdrPipeline.explodeIps(CdrPipeline.extendWithPartitionCols(src)
-          .filter(col("imsi").isNull)), msIp, "left_outer")).count())
     // the WINDOW-form dedup is the documented slow twin (kept to measure
     // the contrast vs the aggregation form: 94-375 s vs 2-4 s at ×10);
     // skip it at big factors where the contrast is already on record and

@@ -22,16 +22,6 @@ object Util {
     if (unknown || size <= BigInt(maxBytes)) broadcast(dim) else dim
   }
 
-  /** The "this parquet part doesn't exist / has no schema-bearing files"
-    * AnalysisException conditions — ONE list shared by every empty-part
-    * fallback (stored-artifact bootstraps, recall rows, tombstones, the
-    * ingest reseed probe), so a Spark version renaming either condition
-    * is fixed in one place instead of silently diverging per site
-    * (review-caught: the list had grown four hand-rolled copies). */
-  def missingParquet(e: org.apache.spark.sql.AnalysisException): Boolean =
-    Option(e.getCondition).exists(c =>
-      c.startsWith("PATH_NOT_FOUND") || c.startsWith("UNABLE_TO_INFER_SCHEMA"))
-
   /** Shared measurement-JSON persistence for [[Bench]] and [[Tools]]:
     * stdout tails get truncated by a bounded capture, a file does not.
     * `envVar` overrides `defaultPath`; failure to write is a warning,

@@ -1,9 +1,7 @@
 package graft.cdr
 
-import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Driver-checkable queries for every CDR operator in SURVEY §2, paired with
   * DuckDB oracles over the same parquet fixtures. Both sides end in the same

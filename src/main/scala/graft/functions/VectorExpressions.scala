@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSql, SparkSession}
+import org.apache.spark.sql.{Column, GraftSql}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -124,8 +124,4 @@ object VectorFunctions {
         s"vec_dot requires exactly 2 arguments, got ${children.length}")
     DotProduct(children.head, children(1))
   }
-
-  /** SQL surface parity (SURVEY §2 I6): exposes `vec_dot` to `spark.sql`. */
-  def register(spark: SparkSession): Unit =
-    GraftSql.registerFunction(spark, "vec_dot", dotBuilder)
 }

@@ -1,15 +1,31 @@
 package graft.llm
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Compaction of `ingest_batch=`-partitioned artifact parts — the
-  * small-files maintenance every appendable store needs: a streaming
-  * maintainer folds one partition per micro-batch into the dedup
-  * artifact's per-document parts ([[Dedup.appendDedupArtifact]]) and the
-  * ANN indexes' per-vector parts ([[Similarity.appendIvfIndex]],
-  * [[Similarity.appendIvfPqIndex]]), which under daily maintenance is
+/** The `ingest_batch` part protocol of every appendable store, and the
+  * compaction of its parts.
+  *
+  * The protocol: an appendable part (the dedup artifact's per-document
+  * parts, the ANN indexes' per-vector parts, the training-shard store's
+  * manifest, vocab, spans and tombstones) is a parquet directory
+  * partitioned by `ingest_batch`. A build writes batch 0 with a static
+  * overwrite (replacing the whole part); an append writes ITS batch with a
+  * dynamic overwrite, so a replayed micro-batch rewrites its own partition
+  * instead of appending duplicates — the exactly-once replay convention of
+  * the corpus-ingest sinks. [[writeBatch]] is that write, [[readOptional]]
+  * the read of a part that may not exist yet (never built, or built from
+  * zero rows, which leaves no partition dirs), [[nextBatch]] the ad-hoc
+  * "fold today's data in" batch id, and [[batchIds]] the partition
+  * listing.
+  *
+  * Compaction is the small-files maintenance every appendable store
+  * needs: a streaming maintainer folds one partition per micro-batch into
+  * the dedup artifact's per-document parts
+  * ([[Dedup.appendDedupArtifact]]) and the ANN indexes' per-vector parts
+  * ([[Similarity.appendIvfIndex]], [[Similarity.appendIvfPqIndex]]),
+  * which under daily maintenance is
   * 365 small parquet partitions per year per part — read amplification
   * that grows without bound while the DATA stays the same size.
   *
@@ -46,6 +62,65 @@ import org.apache.spark.sql.functions._
   * an append landing after the compaction. */
 object ArtifactCompaction {
 
+  /** Write `df` as partition `ingest_batch=batch` of the part at
+    * `partPath`. `dynamic = false` (a build) replaces the whole part;
+    * `dynamic = true` (an append) overwrites ONLY this batch's partition,
+    * leaving every other batch untouched — the replay-idempotent write. */
+  private[graft] def writeBatch(df: DataFrame, partPath: String, batch: Long,
+                                dynamic: Boolean): Unit =
+    df.withColumn("ingest_batch", lit(batch))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", if (dynamic) "dynamic" else "static")
+      .partitionBy("ingest_batch").parquet(partPath)
+
+  /** The parquet at `path`, or None when it does not exist or has no
+    * schema-bearing files (a part built from zero rows). Any other
+    * AnalysisException (a footer problem surfaced at read planning, a
+    * schema conflict) propagates: callers fall back to an empty store,
+    * and that must never paper over a damaged one. */
+  private[graft] def readOptional(spark: SparkSession,
+                                  path: String): Option[DataFrame] =
+    try Some(spark.read.parquet(path))
+    catch { case e: AnalysisException if missingParquet(e) => None }
+
+  /** The "this parquet doesn't exist / has no schema-bearing files"
+    * conditions — one list, so a Spark version renaming either condition
+    * is fixed in one place. */
+  private def missingParquet(e: AnalysisException): Boolean =
+    Option(e.getCondition).exists(c =>
+      c.startsWith("PATH_NOT_FOUND") || c.startsWith("UNABLE_TO_INFER_SCHEMA"))
+
+  /** max(ingest_batch)+1 over the stored rows of a part, or `whenEmpty`
+    * when the part is missing or holds no rows — the ad-hoc "fold today's
+    * data in" batch id (parquet footer metadata makes the max cheap;
+    * streaming maintainers pass the batch id explicitly). A data read, not
+    * a directory listing: a torn partition with no committed rows must not
+    * advance the id. */
+  private[graft] def nextBatch(spark: SparkSession, partPath: String,
+                               whenEmpty: Long): Long =
+    readOptional(spark, partPath)
+      .map(_.agg(max(col("ingest_batch").cast("long"))).head())
+      .filterNot(_.isNullAt(0))
+      .fold(whenEmpty)(_.getLong(0) + 1L)
+
+  /** The `ingest_batch` ids with a partition directory under `partPath`
+    * (one listStatus, never a data read); empty when the part does not
+    * exist. Underscore-prefixed compaction scratch and plain files are not
+    * batches. */
+  private[graft] def batchIds(spark: SparkSession, partPath: String): Seq[Long] = {
+    val base = new Path(partPath)
+    batchIds(base.getFileSystem(spark.sparkContext.hadoopConfiguration), base)
+  }
+
+  private def batchIds(fs: FileSystem, base: Path): Seq[Long] =
+    if (!fs.exists(base)) Nil
+    else fs.listStatus(base).toSeq
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith("ingest_batch="))
+      .map(_.getPath.getName.stripPrefix("ingest_batch=").toLong)
+
+  private def batchDir(base: Path, batch: Long): Path =
+    new Path(base, s"ingest_batch=$batch")
+
   /** Rewrite partitions `ingest_batch <= upTo` of one part into ONE
     * partition. The merge target is SNAPPED to the largest EXISTING
     * partition id <= upTo (mirroring
@@ -65,19 +140,15 @@ object ArtifactCompaction {
     val tmp = new Path(base, "_tmp-compact")
     val plan = new Path(base, "_compact-plan")
     recover(fs, base, tmp, plan)
-    val parts = fs.listStatus(base)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("ingest_batch="))
-    val old = parts.filter(
-      _.getPath.getName.stripPrefix("ingest_batch=").toLong <= upTo)
+    val old = batchIds(fs, base).filter(_ <= upTo)
     if (old.length <= 1) return 0
     // snap: the merged partition always reuses a REAL existing batch id
-    val target = old.map(
-      _.getPath.getName.stripPrefix("ingest_batch=").toLong).max
+    val target = old.max
     // file count from the bytes being merged — one ~128 MiB file per, the
     // parquet-scan-friendly size; never coalesce(1) (a 100 TB-scale part's
     // compaction must stay distributed)
-    val bytes = old.iterator.map(s =>
-      fs.getContentSummary(s.getPath).getLength).sum
+    val bytes = old.iterator.map(b =>
+      fs.getContentSummary(batchDir(base, b)).getLength).sum
     val nFiles = math.max(1L, (bytes + (128L << 20) - 1) / (128L << 20)).toInt
     spark.read.parquet(partPath)
       .filter(col("ingest_batch").cast("long") <= target)
@@ -94,7 +165,7 @@ object ArtifactCompaction {
 
   /** delete-old → rename → plan-delete, every step idempotent under
     * re-execution (the roll-forward body). */
-  private def swap(fs: org.apache.hadoop.fs.FileSystem, base: Path,
+  private def swap(fs: FileSystem, base: Path,
                    tmp: Path, plan: Path, upTo: Long): Unit = {
     // require-checked deletes: FileSystem.delete returns false (rather
     // than throwing) for several failure modes, and proceeding past one
@@ -102,13 +173,11 @@ object ArtifactCompaction {
     // every read double-counts, and if the survivor is ingest_batch=upTo
     // itself the rename below would nest the tmp dir INSIDE it
     // (review-caught)
-    fs.listStatus(base)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("ingest_batch="))
-      .filter(_.getPath.getName.stripPrefix("ingest_batch=").toLong <= upTo)
-      .foreach(s => require(fs.delete(s.getPath, true),
-        s"$base: delete of ${s.getPath.getName} failed — aborting before " +
+    batchIds(fs, base).filter(_ <= upTo).map(batchDir(base, _))
+      .foreach(p => require(fs.delete(p, true),
+        s"$base: delete of ${p.getName} failed — aborting before " +
           "the compacted rename (data still complete in _tmp-compact)"))
-    require(fs.rename(tmp, new Path(base, s"ingest_batch=$upTo")),
+    require(fs.rename(tmp, batchDir(base, upTo)),
       s"$base: rename of the compacted partition failed")
     require(fs.delete(plan, false), s"$base: plan-marker delete failed")
   }
@@ -117,11 +186,11 @@ object ArtifactCompaction {
     * ([[graft.Util.atomicMarkerWrite]]): a crash mid-write must never
     * leave an empty/truncated plan that wedges recovery or rolls forward
     * with the WRONG upTo (review-caught). */
-  private def writePlan(fs: org.apache.hadoop.fs.FileSystem, plan: Path,
+  private def writePlan(fs: FileSystem, plan: Path,
                         upTo: Long): Unit =
     graft.Util.atomicMarkerWrite(fs, plan, upTo.toString)
 
-  private def readPlan(fs: org.apache.hadoop.fs.FileSystem, plan: Path): Long = {
+  private def readPlan(fs: FileSystem, plan: Path): Long = {
     val in = fs.open(plan)
     try new String(in.readAllBytes(), "UTF-8").trim.toLong finally in.close()
   }
@@ -145,7 +214,7 @@ object ArtifactCompaction {
   /** Roll a crashed compaction forward or back — called at the top of
     * every [[compactPart]], so the operation is restartable from any
     * crash point. */
-  private def recover(fs: org.apache.hadoop.fs.FileSystem, base: Path,
+  private def recover(fs: FileSystem, base: Path,
                       tmp: Path, plan: Path): Unit = {
     // a crashed writePlan leaves only the staging name — scrap, never read
     val staging = plan.suffix(".staging")
@@ -170,11 +239,7 @@ object ArtifactCompaction {
     * committed pass `upTo` explicitly. */
   private[llm] def defaultWatermark(spark: SparkSession,
                                     partPath: String): Long = {
-    val base = new Path(partPath)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ids = fs.listStatus(base)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("ingest_batch="))
-      .map(_.getPath.getName.stripPrefix("ingest_batch=").toLong)
+    val ids = batchIds(spark, partPath)
     require(ids.nonEmpty, s"$partPath: no ingest_batch partitions to compact")
     ids.max - 1
   }

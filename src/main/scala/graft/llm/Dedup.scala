@@ -866,18 +866,13 @@ object Dedup {
     * component of the gate is unaffected. */
   def dedupCoverage(spark: SparkSession,
                     path: String): Option[(Long, Long, Double, Long)] =
-    try {
-      // named selects: the measuredRecall column-order discipline
-      spark.read.parquet(s"$path/coverage")
-        .select(col("built_n").cast("long"), col("appended_n").cast("long"),
-          col("stale_frac").cast("double"),
-          col("measured_at_batch").cast("long"))
+    // named selects: the measuredRecall column-order discipline
+    ArtifactCompaction.readOptional(spark, s"$path/coverage").flatMap(
+      _.select(col("built_n").cast("long"), col("appended_n").cast("long"),
+        col("stale_frac").cast("double"),
+        col("measured_at_batch").cast("long"))
         .limit(1).collect().headOption
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
-    } catch {
-      case e: org.apache.spark.sql.AnalysisException
-        if graft.Util.missingParquet(e) => None
-    }
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))))
 
   private def writeCoverage(spark: SparkSession, path: String, builtN: Long,
                             appendedN: Long, staleFrac: Double,
@@ -914,22 +909,14 @@ object Dedup {
     }
 
   /** The per-document parts of the hashed artifact, written as ONE
-    * `ingest_batch=` partition — the idempotency unit: a replayed
-    * micro-batch (dynamic partition overwrite) rewrites ITS partition
-    * instead of appending duplicates, the same exactly-once convention as
-    * the corpus-ingest sinks. */
+    * `ingest_batch=` partition each ([[ArtifactCompaction.writeBatch]]):
+    * the initial build (`dynamic = false`) resets any previous artifact at
+    * the path, an append overwrites ONLY its own increment's partition. */
   private def writeIncrementParts(shid: DataFrame, nodes: DataFrame,
                                   path: String, ingestBatch: Long,
                                   dynamic: Boolean): Unit = {
-    // dynamic=false (initial build): a FULL overwrite, resetting any
-    // previous artifact at the path; dynamic=true (append): overwrite
-    // ONLY this increment's ingest_batch partition, leaving the corpus
-    // partitions untouched — the replay-idempotent write
     def part(df: DataFrame, p: String): Unit =
-      df.withColumn("ingest_batch", lit(ingestBatch))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", if (dynamic) "dynamic" else "static")
-        .partitionBy("ingest_batch").parquet(s"$path/$p")
+      ArtifactCompaction.writeBatch(df, s"$path/$p", ingestBatch, dynamic)
     part(shid, "shingles")
     part(bandValsOf(shid), "bands")
     part(shid.groupBy("doc_id").agg(count(lit(1)).as("c")), "counts")
@@ -956,35 +943,12 @@ object Dedup {
     * patch exists). */
   /** [[appendDedupArtifact]] with the increment id derived as
     * max(ingest_batch)+1 — the ad-hoc "fold today's data in" form. */
-  def appendDedupArtifact(newDocs: DataFrame, path: String): Unit = {
-    val spark = newDocs.sparkSession
+  def appendDedupArtifact(newDocs: DataFrame, path: String): Unit =
     // empty-seed bootstrap: a seed built from zero documents writes no
     // partition directories (Spark can't materialize partition dirs for
-    // zero rows), so the nodes read has no schema to infer — the first
-    // real increment starts the partition sequence at 0
-    val next = readPartOr(spark, path, "nodes") {
-        spark.range(0).select(col("id").as("doc_id"))
-      }
-      .agg(max(col("ingest_batch").cast("long"))).head() match {
-        case r if r.isNullAt(0) => 0L
-        case r => r.getLong(0) + 1L
-      }
-    appendDedupArtifact(newDocs, path, next)
-  }
-
-  /** Read a per-document artifact part, falling back to an empty
-    * DataFrame shaped like `like` (plus the ingest_batch partition column)
-    * when the part has no schema-bearing files — the empty-seed case: a
-    * hashed artifact built from zero documents writes no partition dirs,
-    * and the first append must bootstrap, not fail schema inference. */
-  private def readPartOr(spark: SparkSession, path: String, p: String)
-                        (like: => DataFrame): DataFrame =
-    try spark.read.parquet(s"$path/$p")
-    catch {
-      case e: org.apache.spark.sql.AnalysisException
-        if graft.Util.missingParquet(e) =>
-        like.limit(0).withColumn("ingest_batch", lit(0L))
-    }
+    // zero rows) — the first real increment starts the sequence at 0
+    appendDedupArtifact(newDocs, path,
+      ArtifactCompaction.nextBatch(newDocs.sparkSession, s"$path/nodes", 0L))
 
   def appendDedupArtifact(newDocs: DataFrame, path: String,
                           ingestBatch: Long): Unit = {
@@ -1000,22 +964,20 @@ object Dedup {
     val newShid = shingleIdsHashed(tokenized(newDocs)).localCheckpoint(eager = true)
     val newBands = bandValsOf(newShid).localCheckpoint(eager = true)
     val newCnt = newShid.groupBy("doc_id").agg(count(lit(1)).as("c"))
-    // empty-seed bootstrap: each stored part falls back to an empty frame
-    // shaped like ITS increment twin (readPartOr) — no hardcoded schemas
-    // to drift, and the append algebra below degenerates to exactly the
+    // empty-seed bootstrap: a part built from zero documents has no
+    // schema-bearing files, so each stored part falls back to an empty
+    // frame shaped like ITS increment twin — no hardcoded schemas to
+    // drift, and the append algebra below degenerates to exactly the
     // initial build when every stored side is empty
     def oldPart(p: String, like: => DataFrame, cols: String*) =
-      readPartOr(spark, path, p)(like)
+      ArtifactCompaction.readOptional(spark, s"$path/$p")
+        .getOrElse(like.limit(0).withColumn("ingest_batch", lit(0L)))
         .filter(col("ingest_batch").cast("long") =!= ingestBatch)
         .select(cols.map(col): _*)
-    val oldPairs = (
-      try spark.read.parquet(s"$path/pairs")
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-          if graft.Util.missingParquet(e) =>
-          spark.range(0).select(col("id").as("doc_a"), col("id").as("doc_b"),
-            col("id").cast("double").as("jaccard"))
-      }).localCheckpoint(eager = true)
+    val oldPairs = ArtifactCompaction.readOptional(spark, s"$path/pairs")
+      .getOrElse(spark.range(0).select(col("id").as("doc_a"),
+        col("id").as("doc_b"), col("id").cast("double").as("jaccard")))
+      .localCheckpoint(eager = true)
     val oldBands = oldPart("bands", newBands, "doc_id", "band", "bval")
     val oldShid = oldPart("shingles", newShid, "doc_id", "sid")
     val oldCnt = oldPart("counts", newCnt, "doc_id", "c")
@@ -1061,15 +1023,10 @@ object Dedup {
     // swap (the old labels are still on disk): of the docs labeled before
     // this append, what fraction's label changed. One narrow corpus-sized
     // join — within the cluster swap's own cost envelope.
-    val oldClusters = (
-      try spark.read.parquet(s"$path/clusters")
-        .select(col("doc_id"), col("cluster").as("old_cluster"))
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-          if graft.Util.missingParquet(e) =>
-          spark.range(0).select(col("id").as("doc_id"),
-            col("id").as("old_cluster"))
-      })
+    val oldClusters = ArtifactCompaction.readOptional(spark, s"$path/clusters")
+      .map(_.select(col("doc_id"), col("cluster").as("old_cluster")))
+      .getOrElse(spark.range(0).select(col("id").as("doc_id"),
+        col("id").as("old_cluster")))
     val m = newClusters.join(oldClusters, "doc_id")
       .agg(count(lit(1)),
         count(when(col("cluster") =!= col("old_cluster"), lit(1)))).head()

@@ -88,7 +88,7 @@ object LinearTrainer {
     import spark.implicits._
     require(d >= 2 && steps >= 1 && lrMicro > 0, s"bad train params ($d, $steps, $lrMicro)")
     require(nDocs > 0, "empty corpus")
-    var w = Array.fill(d)(0L)
+    val w = Array.fill(d)(0L)
     val traj = Seq.newBuilder[(Long, Long, Long, Long)]
     for (t <- 1 to steps) {
       val wDf = w.zipWithIndex.toSeq

@@ -611,23 +611,13 @@ object Similarity {
       s"empty centroid table: no corpus vec_id % $centroidMod == 0 — " +
         "re-key vec_id or pass a different centroidMod")
     cent.write.mode("overwrite").parquet(s"$path/centroids")
-    writeIndexPart(assignToCells(e, cent), s"$path/cells",
-      ingestBatch = 0L, dynamic = false)
+    // per-vector parts (cells / codes / vectors) follow the
+    // ArtifactCompaction ingest_batch protocol; every query path projects
+    // its columns explicitly, so the partition column never reaches an
+    // output
+    ArtifactCompaction.writeBatch(assignToCells(e, cent), s"$path/cells",
+      batch = 0L, dynamic = false)
   }
-
-  /** Per-vector index parts (cells / codes / vectors) are written as ONE
-    * `ingest_batch=` partition — the idempotency unit of the appendable
-    * index, the [[graft.llm.Dedup]] writeIncrementParts convention: a
-    * replayed micro-batch (dynamic partition overwrite) rewrites ITS
-    * partition instead of appending duplicates. Readers are unaffected:
-    * every query path projects its columns explicitly, so the partition
-    * column never reaches an output. */
-  private def writeIndexPart(df: DataFrame, path: String,
-                             ingestBatch: Long, dynamic: Boolean): Unit =
-    df.withColumn("ingest_batch", lit(ingestBatch))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", if (dynamic) "dynamic" else "static")
-      .partitionBy("ingest_batch").parquet(path)
 
   /** [[writeIvfIndex]] with [[ivfSizedParams]] defaults: the index is
     * built at the corpus-derived nlist and the derived nprobe is stored
@@ -667,11 +657,12 @@ object Similarity {
     * Lloyd's over everything, the one full-corpus pass the append path
     * amortizes away). */
   def appendIvfIndex(newVecs: DataFrame, path: String): Unit =
-    appendIvfIndex(newVecs, path, nextIngestBatch(newVecs.sparkSession, s"$path/cells"))
+    appendIvfIndex(newVecs, path,
+      ArtifactCompaction.nextBatch(newVecs.sparkSession, s"$path/cells", 0L))
 
   def appendIvfIndex(newVecs: DataFrame, path: String, ingestBatch: Long): Unit = {
     val cent = newVecs.sparkSession.read.parquet(s"$path/centroids")
-    writeIndexPart(assignAgainst(newVecs, cent), s"$path/cells",
+    ArtifactCompaction.writeBatch(assignAgainst(newVecs, cent), s"$path/cells",
       ingestBatch, dynamic = true)
   }
 
@@ -702,16 +693,6 @@ object Similarity {
   private[graft] def pqCodesAgainst(vecs: DataFrame, cent: DataFrame,
                                     cbr: DataFrame): DataFrame =
     encodeResiduals(residualSubs(normed(vecs), cent), cbr)
-
-  /** max(ingest_batch)+1 over a stored per-vector part — the ad-hoc "fold
-    * today's vectors in" id derivation (parquet footer metadata makes the
-    * max cheap; streaming maintainers pass the batch id explicitly). */
-  private def nextIngestBatch(spark: SparkSession, partPath: String): Long =
-    spark.read.parquet(partPath)
-      .agg(max(col("ingest_batch").cast("long"))).head() match {
-        case r if r.isNullAt(0) => 0L
-        case r => r.getLong(0) + 1L
-      }
 
   /** Default drift-trigger factors, RE-DERIVED in r12 from MEASURED
     * appended-index recall instead of the r11 rule-of-thumb 2.0: a sized
@@ -779,21 +760,16 @@ object Similarity {
     * never crash a maintainer's poll loop (review-caught). */
   def measuredRecall(spark: SparkSession,
                      path: String): Option[(Double, Long)] =
-    try {
-      // columns selected BY NAME: reading by ordinal would silently
-      // depend on the parquet file's column order, and a writer-side
-      // reorder of recordMeasuredRecall's toDF would swap recall and
-      // size — corrupting the rebuild gate with no error (advisor r13);
-      // indexNeedsRebuild's params read follows the same discipline
-      spark.read.parquet(s"$path/recall")
-        .select(col("measured_recall").cast("double"),
-          col("measured_at_n").cast("long"))
+    // columns selected BY NAME: reading by ordinal would silently depend
+    // on the parquet file's column order, and a writer-side reorder of
+    // recordMeasuredRecall's toDF would swap recall and size — corrupting
+    // the rebuild gate with no error (advisor r13); indexNeedsRebuild's
+    // params read follows the same discipline
+    ArtifactCompaction.readOptional(spark, s"$path/recall").flatMap(
+      _.select(col("measured_recall").cast("double"),
+        col("measured_at_n").cast("long"))
         .limit(1).collect()
-        .headOption.map(r => (r.getDouble(0), r.getLong(1)))
-    } catch {
-      case e: org.apache.spark.sql.AnalysisException
-        if graft.Util.missingParquet(e) => None
-    }
+        .headOption.map(r => (r.getDouble(0), r.getLong(1))))
 
   /** Delete a stored recall row — every index (re)build starts here. */
   private def dropRecallRow(spark: SparkSession, path: String): Unit = {
@@ -907,12 +883,12 @@ object Similarity {
     require(!cbr.isEmpty,
       s"empty PQ codebook: no corpus vec_id % $codeMod == 0")
     cbr.write.mode("overwrite").parquet(s"$path/codebook")
-    writeIndexPart(encodeResiduals(rsub, cbr), s"$path/codes",
-      ingestBatch = 0L, dynamic = false)
+    ArtifactCompaction.writeBatch(encodeResiduals(rsub, cbr), s"$path/codes",
+      batch = 0L, dynamic = false)
     // refine's exact vectors: a separate part the ADC scan never reads
-    writeIndexPart(
+    ArtifactCompaction.writeBatch(
       e.select(col("vec_id").as("neighbor_id"), col("v").as("vb"), col("nrm").as("nb")),
-      s"$path/vectors", ingestBatch = 0L, dynamic = false)
+      s"$path/vectors", batch = 0L, dynamic = false)
     Seq((nlist, cmod, nprobe, targetRecall, codeMod, refine, n))
       .toDF("nlist", "centroid_mod", "nprobe", "target_recall", "code_mod",
         "refine", "build_n")
@@ -958,7 +934,7 @@ object Similarity {
     * same `rebuildFactor ×` build_n rule. */
   def appendIvfPqIndex(newVecs: DataFrame, path: String): Unit =
     appendIvfPqIndex(newVecs, path,
-      nextIngestBatch(newVecs.sparkSession, s"$path/vectors"))
+      ArtifactCompaction.nextBatch(newVecs.sparkSession, s"$path/vectors", 0L))
 
   def appendIvfPqIndex(newVecs: DataFrame, path: String,
                        ingestBatch: Long): Unit = {
@@ -968,9 +944,9 @@ object Similarity {
     val cbr = spark.read.parquet(s"$path/codebook")
       .localCheckpoint(eager = true)
     val e = normed(newVecs).localCheckpoint(eager = true)
-    writeIndexPart(encodeResiduals(residualSubs(e, cent), cbr),
+    ArtifactCompaction.writeBatch(encodeResiduals(residualSubs(e, cent), cbr),
       s"$path/codes", ingestBatch, dynamic = true)
-    writeIndexPart(
+    ArtifactCompaction.writeBatch(
       e.select(col("vec_id").as("neighbor_id"), col("v").as("vb"), col("nrm").as("nb")),
       s"$path/vectors", ingestBatch, dynamic = true)
   }

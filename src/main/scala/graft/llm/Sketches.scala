@@ -268,12 +268,6 @@ object Sketches {
     * map-side-combining count aggregation whose key space is d·w = 2048 —
     * every map task pre-reduces to ≤ 2048 rows before the exchange, so the
     * shuffle volume is #partitions·2048 rows at any corpus size. */
-  def cmsCounters(docs: DataFrame): DataFrame =
-    cmsCountersOf(
-      oracleMix(
-        docs.select(explode(split(col("text"), " ")).as("token"))
-          .join(broadcast(Dedup.vocab(Dedup.tokenized(docs))), "token")))
-
   private def cmsCountersOf(hashed: DataFrame): DataFrame =
     hashed
       .withColumn("hm", expr(s"h % $CmsP"))

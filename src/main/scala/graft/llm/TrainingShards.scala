@@ -115,8 +115,9 @@ object TrainingShards {
     try {
       val st = newDocs.agg(count(lit(1)),
         coalesce(sum(octet_length(col("text"))), lit(0L))).head()
+      // batch 0 is the build's: a manifest with no rows starts at 1
       appendTrainingShards(newDocs, dir, shardCountFor(st.getLong(1), st.getLong(0)),
-        nextIngestBatch(newDocs.sparkSession, dir))
+        ArtifactCompaction.nextBatch(newDocs.sparkSession, s"$dir/manifest", 1L))
     } finally newDocs.unpersist()
   }
 
@@ -327,27 +328,16 @@ object TrainingShards {
     // row (zeros for empty shards) so readers learn the full id range
     // without listing files.
     val byShard = stats.map(s => s._1 -> s).toMap
-    (0L until nShards.toLong).map(_ + shardBase)
-      .map(s => byShard.get(s) match {
-        case Some((_, n, b)) => (s, n, b, ingestBatch)
-        case None => (s, 0L, 0L, ingestBatch)
-      })
-      .toDF("shard", "n_docs", "n_bytes", "ingest_batch")
-      .coalesce(1)
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", if (dynamic) "dynamic" else "static")
-      .partitionBy("ingest_batch").parquet(s"$dir/manifest")
+    ArtifactCompaction.writeBatch(
+      (0L until nShards.toLong).map(_ + shardBase)
+        .map(s => byShard.get(s) match {
+          case Some((_, n, b)) => (s, n, b)
+          case None => (s, 0L, 0L)
+        })
+        .toDF("shard", "n_docs", "n_bytes")
+        .coalesce(1),
+      s"$dir/manifest", ingestBatch, dynamic)
   }
-
-  /** max(ingest_batch)+1 over the stored manifest — the ad-hoc "fold
-    * today's corpus in" derivation (parquet footer metadata; streaming
-    * maintainers pass the batch id explicitly). */
-  private def nextIngestBatch(spark: SparkSession, dir: String): Long =
-    spark.read.parquet(s"$dir/manifest")
-      .agg(max(col("ingest_batch").cast("long"))).head() match {
-        case r if r.isNullAt(0) => 1L
-        case r => r.getLong(0) + 1L
-      }
 
   /** Decode the stored containers back to (shard, pos, doc_id, text) —
     * the training job's read path, and the round-trip oracle's Spark
@@ -431,9 +421,8 @@ object TrainingShards {
       .write.mode("overwrite").parquet(s"$dir/tokenizer/merges")
     // vocab grows by append (new symbols of later increments get ids past
     // the stored max) — ingest_batch-partitioned like every per-batch part
-    vocab.withColumn("ingest_batch", lit(0L))
-      .write.mode("overwrite").partitionBy("ingest_batch")
-      .parquet(s"$dir/tokenizer/vocab")
+    ArtifactCompaction.writeBatch(vocab, s"$dir/tokenizer/vocab", 0L,
+      dynamic = false)
     // the prefix sum's bucket boundaries are sampled ONCE here and stored
     // with the params — every append/maintained batch reuses them instead
     // of re-running the quantile job over a mostly-stable id distribution
@@ -457,9 +446,8 @@ object TrainingShards {
     val plan = packPlanFromCounts(counts, budget, bounds, countsPinned = true)
     // spans before containers before manifest: the manifest stays the
     // commit marker, and readers gate the spans part on committed batches
-    plan.spans.withColumn("ingest_batch", lit(0L))
-      .write.mode("overwrite").partitionBy("ingest_batch")
-      .parquet(s"$dir/spans")
+    ArtifactCompaction.writeBatch(plan.spans, s"$dir/spans", 0L,
+      dynamic = false)
     def entries = withLayout(packPayloadsFromDocArrays(
         BpeTrainer.docTokenArrays(docs, wordSyms, vocab), plan, budget)
       .select(col("pack_seq").as("entry_id"), col("payload")),
@@ -549,19 +537,14 @@ object TrainingShards {
     val shardBase = meta.shardBase
     val packBase = meta.packBase
     val merges = BpeTrainer.loadMerges(spark, s"$dir/tokenizer/merges")
-    // empty-seed bootstrap (the Dedup.readPartOr convention): a store
+    // empty-seed bootstrap (ArtifactCompaction.readOptional): a store
     // built from zero/wordless docs writes a ZERO-ROW vocab, which leaves
     // no partition dirs to infer a schema from, and its max(token_id) is
     // NULL — the first real increment must start the id space at 0, not
     // crash (review-caught)
-    val storedVocab = (
-      try spark.read.parquet(s"$dir/tokenizer/vocab")
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-          if graft.Util.missingParquet(e) =>
-          spark.range(0).select(col("id").cast("string").as("sym"),
-            col("id").as("token_id"), col("id").as("ingest_batch"))
-      })
+    val storedVocab = ArtifactCompaction.readOptional(spark, s"$dir/tokenizer/vocab")
+      .getOrElse(spark.range(0).select(col("id").cast("string").as("sym"),
+        col("id").as("token_id"), col("id").as("ingest_batch")))
       .filter(col("ingest_batch").cast("long") < ingestBatch)
       .select(col("sym"), col("token_id"))
     // the stored vocab max rides the newSyms job as a broadcast one-row
@@ -578,9 +561,8 @@ object TrainingShards {
       .withColumn("token_id",
         row_number().over(Window.orderBy(col("sym"))).cast("long") + col("_max_id"))
       .select(col("sym"), col("token_id"))
-    newSyms.withColumn("ingest_batch", lit(ingestBatch))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("ingest_batch").parquet(s"$dir/tokenizer/vocab")
+    ArtifactCompaction.writeBatch(newSyms, s"$dir/tokenizer/vocab",
+      ingestBatch, dynamic = true)
     val vocab = storedVocab.unionByName(newSyms)
     // stored bucket boundaries: the build's one quantile job, reused —
     // one fewer job per maintained batch, same answer (bucket-invariant)
@@ -590,10 +572,9 @@ object TrainingShards {
         graft.operators.PrefixSum.defaultBuckets(newDocs)))
     val plan = packPlanFromCounts(
       BpeTrainer.docTokenCountsFrom(newDocs, wordSyms), budget, bounds)
-    plan.spans.withColumn("pack_seq", col("pack_seq") + packBase)
-      .withColumn("ingest_batch", lit(ingestBatch))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("ingest_batch").parquet(s"$dir/spans")
+    ArtifactCompaction.writeBatch(
+      plan.spans.withColumn("pack_seq", col("pack_seq") + packBase),
+      s"$dir/spans", ingestBatch, dynamic = true)
     // the global batch base shifts every pack id uniformly, so adding it
     // after payload assembly groups the identical pack contents
     def entries = withLayout(packPayloadsFromDocArrays(
@@ -958,21 +939,15 @@ object TrainingShards {
     * via [[ArtifactCompaction]]. */
   def addTombstones(spark: SparkSession, dir: String, docIds: DataFrame,
                     ingestBatch: Long): Unit =
-    docIds.select(col("doc_id")).distinct()
-      .withColumn("ingest_batch", lit(ingestBatch))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("ingest_batch").parquet(s"$dir/tombstones")
+    ArtifactCompaction.writeBatch(docIds.select(col("doc_id")).distinct(),
+      s"$dir/tombstones", ingestBatch, dynamic = true)
 
   /** Every tombstoned doc id, across all takedown batches (empty frame if
     * no takedown ever happened). */
   def readTombstones(spark: SparkSession, dir: String): DataFrame =
-    (try spark.read.parquet(s"$dir/tombstones")
-    catch {
-      case e: org.apache.spark.sql.AnalysisException
-        if graft.Util.missingParquet(e) =>
-        spark.range(0).select(col("id").as("doc_id"),
-          col("id").as("ingest_batch"))
-    }).select(col("doc_id")).distinct()
+    ArtifactCompaction.readOptional(spark, s"$dir/tombstones")
+      .getOrElse(spark.range(0).select(col("id").as("doc_id")))
+      .select(col("doc_id")).distinct()
 
   /** The span table minus tombstoned documents — what a loss-masking
     * training job actually reads: pack positions NOT covered by an
@@ -1349,7 +1324,6 @@ object TrainingShards {
     * the swap so the crash spec can kill between the two. */
   private[graft] def prepareRebuild(spark: SparkSession, dir: String,
                                     nShards: Int): (Long, Seq[Long], Seq[Long]) = {
-    import org.apache.spark.sql.expressions.Window
     val hconf = spark.sparkContext.hadoopConfiguration
     val base = new Path(dir)
     val fs = base.getFileSystem(hconf)
@@ -1427,9 +1401,8 @@ object TrainingShards {
       .select(col("sym"), col("token_id"))
     // ---- build the ENTIRE new store under _rebuild/ (tmp build phase)
     fs.mkdirs(tmp)
-    vocabCarried.withColumn("ingest_batch", lit(0L))
-      .write.mode("overwrite").partitionBy("ingest_batch")
-      .parquet(s"$dir/_rebuild/vocab")
+    ArtifactCompaction.writeBatch(vocabCarried, s"$dir/_rebuild/vocab", 0L,
+      dynamic = false)
     locally {
       import spark.implicits._
       Seq((k, budget, bounds.toSeq)).toDF("k", "budget", "bounds")
@@ -1439,9 +1412,8 @@ object TrainingShards {
     // spans partition its token run, so Σ span n_tokens = the doc's token
     // count; the counts checkpoint never pays the container-decode + slice
     // chain, and the decode runs exactly once, in the container write)
-    plan.spans.withColumn("ingest_batch", lit(0L))
-      .write.mode("overwrite").partitionBy("ingest_batch")
-      .parquet(s"$dir/_rebuild/spans")
+    ArtifactCompaction.writeBatch(plan.spans, s"$dir/_rebuild/spans", 0L,
+      dynamic = false)
     def entries = withLayout(packPayloadsFromDocArrays(docArrs, plan, budget)
       .select(col("pack_seq").as("entry_id"), col("payload")),
       nShards, shardBase = 0L)

@@ -276,19 +276,11 @@ object CorpusIngest {
     // manifest partition), so curated parquet and shard store can never
     // drift apart across a crash.
     shardDir.foreach { sd =>
-      import spark.implicits._
-      // scope the catch to "manifest genuinely absent": any OTHER
-      // AnalysisException (schema inference over a partially-cleaned dir,
-      // a footer problem surfaced at read planning) must propagate, not
-      // trigger writeTrainingShards' recursive reset of committed
-      // containers (review-caught)
-      val seeded = try {
-        spark.read.parquet(s"$sd/manifest"); true
-      } catch {
-        case e: org.apache.spark.sql.AnalysisException
-          if graft.Util.missingParquet(e) => false
-      }
-      if (!seeded)
+      // seed only when the manifest is genuinely absent: readOptional lets
+      // any OTHER AnalysisException (a footer problem surfaced at read
+      // planning) propagate instead of triggering writeTrainingShards'
+      // recursive reset of committed containers (review-caught)
+      if (graft.llm.ArtifactCompaction.readOptional(spark, s"$sd/manifest").isEmpty)
         graft.llm.TrainingShards.writeTrainingShards(
           spark.range(0).select(col("id").as("doc_id"), lit("").as("text")),
           sd, nShards = 1)

@@ -37,11 +37,6 @@ object CsvCodec {
 
   private val tsFormat = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 
-  private val opts = Map(
-    "nullValue" -> "",            // '' ↔ NULL, both directions
-    "timestampFormat" -> tsFormat,
-    "mode" -> "PERMISSIVE")
-
   /** Row → CSV line column (generator contract, CsvData.java:33-40).
     * Every field passes through coalesce(..., ''): concat_ws silently SKIPS
     * null arguments, so an unprotected NULL field would drop its comma and
@@ -67,9 +62,9 @@ object CsvCodec {
     * rows (0.49 s → 0.25 s): Catalyst pushes the garbage-drop filter below
     * the projection, duplicating the decode expression per row — a
     * duplicated `split` costs microseconds where a duplicated Univocity
-    * `from_csv` parse (see [[decodeQuoted]]) dominated the query. The
-    * expensive timestamp parse sits LAST in the filter's OR chain so the
-    * codegen short-circuit skips it for any row with a surviving field. */
+    * `from_csv` parse dominated the query. The expensive timestamp parse
+    * sits LAST in the filter's OR chain so the codegen short-circuit skips
+    * it for any row with a surviving field. */
   def decode(lines: DataFrame, valueCol: String = "value"): DataFrame = {
     val toks = split(col(valueCol).cast("string"), ",", -1)
     // get() is null-on-out-of-bounds under ANSI; '' is the null literal
@@ -85,14 +80,4 @@ object CsvCodec {
       .filter((schema.fieldNames.filterNot(_ == "start_time") :+ "start_time")
         .map(col(_).isNotNull).reduce(_ || _))
   }
-
-  /** Quote-capable decode via Univocity `from_csv` — for wires produced by
-    * a quoting CSV writer (not this library's [[encode]] or the reference
-    * generator). Same PERMISSIVE field-null + garbage-drop contract. Slower:
-    * the pushed-down garbage filter re-evaluates the full parse per row. */
-  def decodeQuoted(lines: DataFrame, valueCol: String = "value"): DataFrame =
-    lines
-      .select(from_csv(col(valueCol).cast("string"), schema, opts).as("r"))
-      .select(col("r.*"))
-      .filter(schema.fieldNames.map(col(_).isNotNull).reduce(_ || _))
 }

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** Auto-compaction policy for the streaming maintainers — the piece that
@@ -33,16 +32,6 @@ object Maintenance {
 
   val DefaultCompactEvery = 32
 
-  /** Count the `ingest_batch=` partition dirs of one part — the trigger
-    * probe (one listStatus; never a data read). */
-  private def partitionCount(spark: SparkSession, partPath: String): Int = {
-    val base = new Path(partPath)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(base)) 0
-    else fs.listStatus(base).count(s =>
-      s.isDirectory && s.getPath.getName.startsWith("ingest_batch="))
-  }
-
   /** Called at the TOP of a micro-batch with `upTo` = the previous
     * batch's partition id. Two jobs with different cadences:
     *
@@ -53,11 +42,14 @@ object Maintenance {
     *     if recovery waited for the next thresholded rewrite.
     *  2. The REWRITE (`compact(upTo)`) is thresholded: only when the
     *     FIRST part (the probe — all parts of one artifact gain batches
-    *     in lockstep) has accumulated more than `every` partition dirs. */
+    *     in lockstep) has accumulated more than `every` partition dirs
+    *     (one listStatus; never a data read). */
   private[streaming] def autoCompact(spark: SparkSession, parts: Seq[String],
                                      every: Int, upTo: Long)
                                     (compact: Long => Unit): Unit = {
     parts.foreach(graft.llm.ArtifactCompaction.recoverPart(spark, _))
-    if (upTo >= 1 && partitionCount(spark, parts.head) > every) compact(upTo)
+    if (upTo >= 1 &&
+      graft.llm.ArtifactCompaction.batchIds(spark, parts.head).size > every)
+      compact(upTo)
   }
 }

@@ -103,6 +103,4 @@ final class PartialKeyCache[K, V](fetch: K => Seq[V],
 
   /** True iff the key is resident (does NOT refresh recency or check TTL). */
   def contains(key: K): Boolean = synchronized(map.containsKey(key))
-
-  def invalidateAll(): Unit = synchronized(map.clear())
 }

@@ -59,15 +59,8 @@ object StreamingTombstones {
       val legacy = fs.exists(committed) &&
         fs.listStatus(committed).exists(_.getPath.getName.forall(_.isDigit))
       val derived = if (legacy) 1L else {
-        val tomb = new Path(dir, "tombstones")
-        val tfs = tomb.getFileSystem(hconf)
-        val maxExisting =
-          if (!tfs.exists(tomb)) -1L
-          else tfs.listStatus(tomb).iterator
-            .filter(s => s.isDirectory &&
-              s.getPath.getName.startsWith("ingest_batch="))
-            .map(_.getPath.getName.stripPrefix("ingest_batch=").toLong)
-            .foldLeft(-1L)(math.max)
+        val maxExisting = graft.llm.ArtifactCompaction
+          .batchIds(spark, s"$dir/tombstones").foldLeft(-1L)(math.max)
         // min 1: partition 0 stays reserved for ad-hoc pre-stream
         // takedowns even on a store with no tombstones yet
         math.max(1L, maxExisting + 1L)

@@ -1,13 +1,12 @@
 package org.apache.spark.sql
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 
-/** Bridge into `private[sql]` Column ↔ Expression converters and the session
-  * function registry, for graft's custom Catalyst expressions. Placing an
-  * object inside `org.apache.spark.sql` is the standard extension pattern
-  * for libraries that add native expressions (the public `Column` API stopped
-  * exposing `expr` in Spark 4's Connect-compatible refactor). */
+/** Bridge into `private[sql]` Column ↔ Expression converters, for graft's
+  * custom Catalyst expressions. Placing an object inside `org.apache.spark.sql`
+  * is the standard extension pattern for libraries that add native
+  * expressions (the public `Column` API stopped exposing `expr` in Spark 4's
+  * Connect-compatible refactor). SQL names come from [[graft.GraftExtensions]]. */
 object GraftSql {
 
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -24,13 +23,4 @@ object GraftSql {
   def analysisError(msg: String): Nothing =
     throw new AnalysisException(
       errorClass = "INTERNAL_ERROR", messageParameters = Map("message" -> msg))
-
-  /** Expose a native expression under a SQL name (session-scoped). */
-  def registerFunction(spark: SparkSession, name: String,
-                       builder: Seq[Expression] => Expression): Unit =
-    spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
-      .registerFunction(
-        FunctionIdentifier(name),
-        new ExpressionInfo("graft.functions", name),
-        builder)
 }

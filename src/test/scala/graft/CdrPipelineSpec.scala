@@ -4,7 +4,6 @@ import java.sql.Timestamp
 
 import graft.cdr.{CdrPipeline, CdrTables}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** Unit coverage per SURVEY §5.1: one test per §2 operator family, including
   * the edge semantics the reference depends on (empty-token filtering, NULL

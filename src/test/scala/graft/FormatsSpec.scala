@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.functions._
 
 /** Source/sink format breadth beyond the parquet fixtures: ORC and CSV file
   * round-trips with the same engine guarantees the parquet path gets —

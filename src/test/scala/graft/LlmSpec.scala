@@ -408,7 +408,6 @@ class LlmSpec extends SparkSpec {
   }
 
   test("vec_dot: SQL registration works and matches the lambda formulation") {
-    graft.functions.VectorFunctions.register(spark)
     val out = spark.sql(
       "SELECT vec_dot(array(1d, 2d, 3d), array(4d, 5d, 6d)) AS d").as[Double].head()
     assert(out == 32.0)
@@ -1474,7 +1473,6 @@ class LlmSpec extends SparkSpec {
   }
 
   test("hybrid RRF: a doc ranked well by both lists beats single-list docs; missing list contributes 0") {
-    import org.apache.spark.sql.functions.lit
     // doc 1 matches the keyword AND is the closest vector; doc 2 only
     // matches keywords; doc 3 is only vector-close; doc 0 is the query vec
     val docs = docsDf(

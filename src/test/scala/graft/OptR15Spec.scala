@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 
 /** Focused equivalence specs for the round-15 OPTIMIZATION pass:
   *  - the MinHash verify join gained an exact size-ratio prefilter

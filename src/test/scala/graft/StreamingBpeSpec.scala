@@ -3,7 +3,6 @@ package graft
 import graft.llm.BpeTrainer
 import graft.streaming.StreamingBpe
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 
 /** Streaming stored-tokenizer apply: prefix ≡ batch on every micro-batch
   * boundary against the oracle-verified batch token counts. */

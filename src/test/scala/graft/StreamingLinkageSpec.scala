@@ -4,7 +4,6 @@ import graft.llm.RecordLinkage
 import graft.streaming.StreamingLinkage
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 
 /** Streaming linkage twin: the dirty feed arrives in micro-batches and is
   * linked against the static clean dimension — prefix ≡ batch on every

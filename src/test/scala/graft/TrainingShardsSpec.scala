@@ -1,7 +1,6 @@
 package graft
 
-import graft.llm.{ShardZip, TrainingShards}
-import org.apache.spark.sql.DataFrame
+import graft.llm.{ArtifactCompaction, ShardZip, TrainingShards}
 import org.apache.spark.sql.functions._
 
 /** The pipeline's last mile as laws: real container files round-trip
@@ -209,5 +208,68 @@ class TrainingShardsSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("non-ZIP64") ||
       Option(e.getCause).exists(_.getMessage.contains("non-ZIP64")))
+  }
+
+  // ---- the ingest_batch part protocol every appendable store shares
+
+  private def tmpPart(tag: String): String =
+    java.nio.file.Files.createTempDirectory(s"graft-part-$tag").toString + "/part"
+
+  test("part protocol: readOptional is None only for a missing or schema-less part; other analysis errors propagate") {
+    val missing = tmpPart("missing")
+    assert(ArtifactCompaction.readOptional(spark, missing).isEmpty)
+    // an existing directory with no data files (UNABLE_TO_INFER_SCHEMA)
+    val bare = tmpPart("bare")
+    new java.io.File(bare).mkdirs()
+    assert(ArtifactCompaction.readOptional(spark, bare).isEmpty)
+    val stored = tmpPart("stored")
+    ArtifactCompaction.writeBatch(Seq(1L, 2L).toDF("doc_id"), stored, 3L,
+      dynamic = false)
+    assert(ArtifactCompaction.readOptional(spark, stored).map(
+      _.select($"doc_id", $"ingest_batch").as[(Long, Long)].collect().toSet)
+      .contains(Set((1L, 3L), (2L, 3L))))
+    // columns that differ only by case are a duplicate under the default
+    // case-insensitive analysis: COLUMN_ALREADY_EXISTS must not read as
+    // an empty store
+    val dup = tmpPart("dup")
+    spark.conf.set("spark.sql.caseSensitive", "true")
+    try Seq((1L, 2L)).toDF("a", "A").write.parquet(dup)
+    finally spark.conf.set("spark.sql.caseSensitive", "false")
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      ArtifactCompaction.readOptional(spark, dup)
+    }
+    assert(e.getCondition == "COLUMN_ALREADY_EXISTS", e.getMessage)
+  }
+
+  test("part protocol: batchIds lists exactly the ingest_batch partition dirs, gaps kept, scratch and plain files ignored") {
+    val missing = tmpPart("ids-missing")
+    assert(ArtifactCompaction.batchIds(spark, missing).isEmpty)
+    val p = tmpPart("ids")
+    Seq(0L, 2L, 5L).foreach(b =>
+      ArtifactCompaction.writeBatch(Seq(b).toDF("doc_id"), p, b, dynamic = true))
+    new java.io.File(p, "_tmp-compact").mkdirs()
+    assert(new java.io.File(p, "ingest_batch=7").createNewFile())
+    assert(new java.io.File(p, "README").createNewFile())
+    assert(ArtifactCompaction.batchIds(spark, p).sorted == Seq(0L, 2L, 5L))
+  }
+
+  test("part protocol: nextBatch is whenEmpty on a missing or zero-row part, max + 1 after batches") {
+    val p = tmpPart("next")
+    assert(ArtifactCompaction.nextBatch(spark, p, 7L) == 7L)
+    // a zero-row build writes no partition dirs at all
+    ArtifactCompaction.writeBatch(spark.range(0).toDF("doc_id"), p, 0L,
+      dynamic = false)
+    assert(ArtifactCompaction.batchIds(spark, p).isEmpty)
+    assert(ArtifactCompaction.nextBatch(spark, p, 1L) == 1L)
+    assert(ArtifactCompaction.nextBatch(spark, p, 0L) == 0L)
+    ArtifactCompaction.writeBatch(Seq(10L).toDF("doc_id"), p, 0L, dynamic = false)
+    ArtifactCompaction.writeBatch(Seq(11L).toDF("doc_id"), p, 3L, dynamic = true)
+    assert(ArtifactCompaction.nextBatch(spark, p, 1L) == 4L)
+    // dynamic overwrite replaced only batch 3; static replaces the part
+    ArtifactCompaction.writeBatch(Seq(12L).toDF("doc_id"), p, 3L, dynamic = true)
+    assert(spark.read.parquet(p).select($"doc_id", $"ingest_batch".cast("long"))
+      .as[(Long, Long)].collect().toSet == Set((10L, 0L), (12L, 3L)))
+    ArtifactCompaction.writeBatch(Seq(13L).toDF("doc_id"), p, 0L, dynamic = false)
+    assert(ArtifactCompaction.batchIds(spark, p) == Seq(0L))
   }
 }

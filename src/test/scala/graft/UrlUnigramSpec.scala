@@ -1,7 +1,6 @@
 package graft
 
 import graft.llm.{Dedup, UnigramLm, UrlCuration}
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Specs for the URL-curation gate, the unigram-LM Viterbi segmentation,
@@ -126,7 +125,7 @@ class UrlUnigramSpec extends SparkSpec {
       }.sum
       val s = p.collect {
         case a: AdaptiveSparkPlanExec => joins(a.initialPlan)._2
-        case j: ShuffledJoin => 1
+        case _: ShuffledJoin => 1
       }.sum
       (b, s)
     }

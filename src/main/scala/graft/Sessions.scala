@@ -10,6 +10,14 @@ import org.apache.spark.sql.SparkSession
   *    timestamp conventions);
   *  - [[cluster]]: the `graft.apps` jobs — master and resources come from
   *    spark-submit, the session pins only its name and UTC.
+  *
+  * Both install [[GraftExtensions]] (`vec_dot`, `edit_within1`, the
+  * banded-interval-join rule, the skyline strategy), as every spec's
+  * session does through `spark.sql.extensions`. A `--conf` that also names
+  * them applies them a second time, which is harmless: the functions
+  * re-register under the same names, the rule skips joins that already
+  * carry its `__graft_bin` marker, and a repeated strategy plans the same
+  * node.
   */
 object Sessions {
 
@@ -30,5 +38,5 @@ object Sessions {
     build(_.appName(appName).config("spark.sql.session.timeZone", "UTC"))
 
   private def build(shape: SparkSession.Builder => SparkSession.Builder): SparkSession =
-    shape(SparkSession.builder()).getOrCreate()
+    shape(SparkSession.builder().withExtensions(new GraftExtensions)).getOrCreate()
 }

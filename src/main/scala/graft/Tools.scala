@@ -707,16 +707,12 @@ object Tools {
     val msIp = CdrTables.msIpExplodedFromEvents(ev)
     val imsi = CdrTables.imsiMsisdn(spark, sfDir) // dim stays dim-sized
 
-    val (nSrc, tScan) = timed("scan+derive count")(
-      CdrPipeline.extendWithPartitionCols(src).count())
+    val ext = CdrPipeline.extendWithPartitionCols(src)
+    val (nSrc, tScan) = timed("scan+derive count")(ext.count())
     val (nJoin, tJoin) = timed("range join only")(
-      CdrPipeline.rangeEnrich(
-        CdrPipeline.explodeIps(CdrPipeline.extendWithPartitionCols(src)
-          .filter(col("imsi").isNull)), msIp, "left_outer").count())
+      CdrPipeline.unknownJoin(ext, msIp).count())
     val (nAgg, tAgg) = timed("argmax dedup (agg)")(
-      CdrPipeline.dedupLatestAgg(CdrPipeline.rangeEnrich(
-        CdrPipeline.explodeIps(CdrPipeline.extendWithPartitionCols(src)
-          .filter(col("imsi").isNull)), msIp, "left_outer")).count())
+      CdrPipeline.dedupLatestAgg(CdrPipeline.unknownJoin(ext, msIp)).count())
     // the WINDOW-form dedup is the documented slow twin (kept to measure
     // the contrast vs the aggregation form: 94-375 s vs 2-4 s at ×10);
     // skip it at big factors where the contrast is already on record and
@@ -727,9 +723,7 @@ object Tools {
     val (nDedup, tDedup) =
       if (skipWindowDedup) (-1L, -1.0)
       else timed("argmax dedup")(
-        CdrPipeline.dedupLatest(CdrPipeline.rangeEnrich(
-          CdrPipeline.explodeIps(CdrPipeline.extendWithPartitionCols(src)
-            .filter(col("imsi").isNull)), msIp, "left_outer")).count())
+        CdrPipeline.dedupLatest(CdrPipeline.unknownJoin(ext, msIp)).count())
     // the as-of twin of the range-join+argmax chain (cdr_asof_enrich): one
     // hash exchange on (probe, ip) + per-partition sort, cost independent
     // of match fan-out — THE reason it's the 100 TB J3/J4+A1 replacement.
@@ -739,21 +733,17 @@ object Tools {
     // payload column forces the full operator; nAsof = matched rows.
     val (nAsof, tAsof) = timed("asof enrich")(
       graft.operators.AsOfJoin.leftAsOf(
-        CdrPipeline.explodeIps(CdrPipeline.extendWithPartitionCols(src)
-          .filter(col("imsi").isNull)),
+        CdrPipeline.explodeIps(ext.filter(col("imsi").isNull)),
         msIp, keys = Seq("probe", "ip"),
         leftTime = "start_time", rightTime = "start_time",
         payload = Seq("imsi" -> "_imsi", "msisdn" -> "_msisdn"))
         .agg(count(col("_imsi"))).head().getLong(0))
     val (nB1, tB1) = timed("branch1 lookup")(
-      CdrPipeline.lookupEnrich(CdrPipeline.extendWithPartitionCols(src)
-        .filter(col("imsi").isNotNull), imsi, "left_outer").count())
+      CdrPipeline.knownBranch(ext, imsi, "left_outer").count())
     val (_, tDedup2) =
       if (skipWindowDedup) (nAgg, -1.0)
       else timed("argmax dedup (rpt)")(
-        CdrPipeline.dedupLatest(CdrPipeline.rangeEnrich(
-          CdrPipeline.explodeIps(CdrPipeline.extendWithPartitionCols(src)
-            .filter(col("imsi").isNull)), msIp, "left_outer")).count())
+        CdrPipeline.dedupLatest(CdrPipeline.unknownJoin(ext, msIp)).count())
     val (nFull, tFull) = timed("full pipeline")(
       CdrPipeline.full(src, imsi, msIp).count())
     System.err.println(s"[stress] join_rows=$nJoin b1_rows=$nB1 dedup_rpt=$tDedup2")

@@ -13,12 +13,16 @@ import org.apache.spark.sql.functions._
   *    (`imsi_msisdn`, `ms_ip_exploded`) are bounded lookup tables
   *    (reference caches them at 100/1000 rows, flink.conf:37-48) and get a
   *    `broadcast()` hint, so J1–J4 lower to BroadcastHashJoin — no exchange
-  *    on the CDR stream. The hint is SIZE-CONDITIONAL ([[hintIfSmall]]): it
+  *    on the CDR stream. The hint is SIZE-CONDITIONAL
+  *    ([[graft.Util.broadcastIfSmall]], shared with the streaming linkage
+  *    dim join so the safety logic can't drift): it
   *    is emitted only while Catalyst's own size estimate of the dim plan
   *    stays under `dimMaxBytes`, so a dimension that outgrows executor
   *    memory degrades to Catalyst's shuffled-hash/SMJ choice instead of
-  *    OOMing on a forced build side (no human in the loop at 3am); the
-  *    range predicate of J3/J4 stays a post-join filter either way.
+  *    OOMing on a forced build side (no human in the loop at 3am); dims
+  *    routed through `DimensionCache` count eagerly, so a genuinely
+  *    oversized dim always reaches the known-big arm there. The range
+  *    predicate of J3/J4 stays a post-join filter either way.
   *  - The only shuffle in the whole pipeline is the argmax dedup (A1/A2),
   *    keyed by `unique_cdr_id` — exactly where the reference shuffles too
   *    (its keyBy, EnrichmentApp.java:146). Key cardinality ~ |CDRs|, values
@@ -65,15 +69,6 @@ object CdrPipeline {
     * broadcast limit. */
   val DimBroadcastMaxBytes: Long = 256L << 20
 
-  /** Emit the `broadcast()` hint unless Catalyst's size estimate of the dim
-    * plan DEMONSTRATES the dim exceeds `maxBytes` — the shared tri-state
-    * convention, [[graft.Util.broadcastIfSmall]] (one definition; the
-    * streaming linkage dim join uses the same one, so the safety logic
-    * can't drift). Dims routed through `DimensionCache` count eagerly, so
-    * a genuinely oversized dim always reaches the known-big arm there. */
-  private def hintIfSmall(dim: DataFrame, maxBytes: Long): DataFrame =
-    graft.Util.broadcastIfSmall(dim, maxBytes)
-
   /** J1/J2 + P6: subscriber lookup join on `imsi` with coalesce-merge
     * (EnrichmentApp.java:300-318, EnrichmentAppWithoutExplode.java:275-293).
     * Stream-static semantics: the static side is (re)read per micro-batch ⇒
@@ -81,7 +76,7 @@ object CdrPipeline {
   def lookupEnrich(src: DataFrame, imsiMsisdn: DataFrame, joinType: String,
                    dimMaxBytes: Long = DimBroadcastMaxBytes): DataFrame = {
     val dim = imsiMsisdn.select(col("imsi").as("_imsi"), col("msisdn").as("_msisdn"))
-    src.join(hintIfSmall(dim, dimMaxBytes), src("imsi") === dim("_imsi"), joinType)
+    src.join(graft.Util.broadcastIfSmall(dim, dimMaxBytes), src("imsi") === dim("_imsi"), joinType)
       .withColumn("imsi", coalesce(col("_imsi"), col("imsi")))
       .withColumn("msisdn", coalesce(col("_msisdn"), col("msisdn")))
       .drop("_imsi", "_msisdn")
@@ -99,7 +94,7 @@ object CdrPipeline {
     val cond = srcExploded("probe") === dim("_probe") &&
       srcExploded("ip") === dim("_ip") &&
       srcExploded("start_time") >= dim("_start_time")
-    srcExploded.join(hintIfSmall(dim, dimMaxBytes), cond, joinType)
+    srcExploded.join(graft.Util.broadcastIfSmall(dim, dimMaxBytes), cond, joinType)
       .withColumn("imsi", coalesce(col("_imsi"), col("imsi")))
       .withColumn("msisdn", coalesce(col("_msisdn"), col("msisdn")))
       .drop("_imsi", "_msisdn", "_probe", "_ip")
@@ -174,20 +169,35 @@ object CdrPipeline {
   def projectToSink(df: DataFrame): DataFrame =
     df.select(sinkColumns.map(col): _*)
 
-  /** The full production pipeline (EnrichmentAppWithoutExplode.run):
-    * F2/F3 branch split on `imsi IS NULL`, J2 lookup enrichment for the known
-    * half, T2→J4→A1 explode/range-join/dedup for the unknown half, P7
-    * projection, K4 union. */
-  def full(src: DataFrame, imsiMsisdn: DataFrame, msIpExploded: DataFrame): DataFrame = {
+  /** The reference's two-branch plan (EnrichmentAppWithoutExplode.run):
+    * F2/F3 branch split on `imsi IS NULL`, J2 lookup enrichment for the
+    * known half ([[knownBranch]]), T2→J4 explode/range-join
+    * ([[unknownJoin]]) then `dedup` for the unknown half, P7 projection,
+    * K4 union. The argmax step is the only one the batch and streaming
+    * forms differ in. */
+  def twoBranch(src: DataFrame, imsiMsisdn: DataFrame, msIpExploded: DataFrame)
+               (dedup: DataFrame => DataFrame): DataFrame = {
     val ext = extendWithPartitionCols(src)
-    val branch1 = projectToSink(
-      lookupEnrich(ext.filter(col("imsi").isNotNull), imsiMsisdn, "left_outer"))
-    // branch2 dedup uses the aggregation argmax: at ×10 fixture scale the
-    // hash aggregate runs the 67M-row dedup ~5× faster than the window
-    // form on the current fixtures (no per-partition sort; ~50× on the
-    // r3-era fixtures' wider fan-out) — see SCALE.md "argmax at scale"
-    val branch2 = projectToSink(
-      dedupLatestAgg(rangeEnrich(explodeIps(ext.filter(col("imsi").isNull)), msIpExploded, "left_outer")))
-    branch1.unionByName(branch2)
+    knownBranch(ext, imsiMsisdn, "left_outer")
+      .unionByName(projectToSink(dedup(unknownJoin(ext, msIpExploded))))
   }
+
+  /** Branch 1 over the partition-extended source: the rows with an `imsi`,
+    * lookup-enriched and projected to the sink schema. */
+  def knownBranch(ext: DataFrame, imsiMsisdn: DataFrame, joinType: String): DataFrame =
+    projectToSink(lookupEnrich(ext.filter(col("imsi").isNotNull), imsiMsisdn, joinType))
+
+  /** Branch 2's pre-dedup join over the partition-extended source: the
+    * rows without an `imsi`, IP-exploded and range-joined to the IP
+    * sessions (keeps `ip` and `_start_time` for the argmax). */
+  def unknownJoin(ext: DataFrame, msIpExploded: DataFrame): DataFrame =
+    rangeEnrich(explodeIps(ext.filter(col("imsi").isNull)), msIpExploded, "left_outer")
+
+  /** The full production pipeline: [[twoBranch]] with the aggregation
+    * argmax. At ×10 fixture scale the hash aggregate runs the 67M-row
+    * dedup ~5× faster than the window form on the current fixtures (no
+    * per-partition sort; ~50× on the r3-era fixtures' wider fan-out) — see
+    * SCALE.md "argmax at scale". */
+  def full(src: DataFrame, imsiMsisdn: DataFrame, msIpExploded: DataFrame): DataFrame =
+    twoBranch(src, imsiMsisdn, msIpExploded)(dedupLatestAgg)
 }

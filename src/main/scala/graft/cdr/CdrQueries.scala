@@ -17,6 +17,12 @@ object CdrQueries {
 
   private val sinkCols = CdrPipeline.sinkColumns
 
+  private def ext(s: SparkSession, dir: String): DataFrame =
+    CdrPipeline.extendWithPartitionCols(CdrTables.src(s, dir))
+
+  private def unknownJoin(s: SparkSession, dir: String): DataFrame =
+    CdrPipeline.unknownJoin(ext(s, dir), CdrTables.msIpExploded(s, dir))
+
   // ---------------------------------------------------------------- Spark
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -25,7 +31,7 @@ object CdrQueries {
 
     // P1–P3: derived partition columns
     "cdr_derive" -> ((s, dir) =>
-      orderAll(CdrPipeline.extendWithPartitionCols(CdrTables.src(s, dir)))),
+      orderAll(ext(s, dir))),
 
     // P1: dev-variant DATE partition column (CAST, not DATE_FORMAT)
     "cdr_derive_date" -> ((s, dir) =>
@@ -33,58 +39,35 @@ object CdrQueries {
 
     // T1/T2 + F1: UDTF-explode of the ;-delimited IP list
     "cdr_explode_ips" -> ((s, dir) =>
-      orderAll(CdrPipeline.explodeIps(
-        CdrPipeline.extendWithPartitionCols(CdrTables.src(s, dir))))),
+      orderAll(CdrPipeline.explodeIps(ext(s, dir)))),
 
     // J1 (+F2, P6, P7): inner lookup join on imsi
-    "cdr_lookup_inner" -> ((s, dir) => {
-      val ext = CdrPipeline.extendWithPartitionCols(CdrTables.src(s, dir))
-      orderAll(CdrPipeline.projectToSink(CdrPipeline.lookupEnrich(
-        ext.filter(col("imsi").isNotNull), CdrTables.imsiMsisdn(s, dir), "inner")))
-    }),
+    "cdr_lookup_inner" -> ((s, dir) =>
+      orderAll(CdrPipeline.knownBranch(ext(s, dir), CdrTables.imsiMsisdn(s, dir), "inner"))),
 
     // J2: left (production) variant — lookup misses keep the CDR
-    "cdr_lookup_left" -> ((s, dir) => {
-      val ext = CdrPipeline.extendWithPartitionCols(CdrTables.src(s, dir))
-      orderAll(CdrPipeline.projectToSink(CdrPipeline.lookupEnrich(
-        ext.filter(col("imsi").isNotNull), CdrTables.imsiMsisdn(s, dir), "left_outer")))
-    }),
+    "cdr_lookup_left" -> ((s, dir) =>
+      orderAll(CdrPipeline.knownBranch(ext(s, dir), CdrTables.imsiMsisdn(s, dir), "left_outer"))),
 
     // J3/J4 (+F3): composite-key + range-predicate enrichment join
-    "cdr_range_join" -> ((s, dir) => {
-      val ext = CdrPipeline.extendWithPartitionCols(CdrTables.src(s, dir))
-      val joined = CdrPipeline.rangeEnrich(
-        CdrPipeline.explodeIps(ext.filter(col("imsi").isNull)),
-        CdrTables.msIpExploded(s, dir), "left_outer")
-      orderAll(joined.select((sinkCols :+ "ip" :+ "_start_time").map(col): _*))
-    }),
+    "cdr_range_join" -> ((s, dir) =>
+      orderAll(unknownJoin(s, dir).select((sinkCols :+ "ip" :+ "_start_time").map(col): _*))),
 
     // A1: whole-row argmax dedup by latest dim session per unique_cdr_id
-    "cdr_dedup_argmax" -> ((s, dir) => {
-      val ext = CdrPipeline.extendWithPartitionCols(CdrTables.src(s, dir))
-      val joined = CdrPipeline.rangeEnrich(
-        CdrPipeline.explodeIps(ext.filter(col("imsi").isNull)),
-        CdrTables.msIpExploded(s, dir), "left_outer")
-      orderAll(CdrPipeline.projectToSink(CdrPipeline.dedupLatest(joined)))
-    }),
+    "cdr_dedup_argmax" -> ((s, dir) =>
+      orderAll(CdrPipeline.projectToSink(CdrPipeline.dedupLatest(unknownJoin(s, dir))))),
 
     // A1 (aggregation form): sort-free hash-aggregate argmax — the scale
     // path for the dedup (see CdrPipeline.dedupLatestAgg scaladoc)
-    "cdr_dedup_argmax_agg" -> ((s, dir) => {
-      val ext = CdrPipeline.extendWithPartitionCols(CdrTables.src(s, dir))
-      val joined = CdrPipeline.rangeEnrich(
-        CdrPipeline.explodeIps(ext.filter(col("imsi").isNull)),
-        CdrTables.msIpExploded(s, dir), "left_outer")
-      orderAll(CdrPipeline.dedupLatestAgg(joined))
-    }),
+    "cdr_dedup_argmax_agg" -> ((s, dir) =>
+      orderAll(CdrPipeline.dedupLatestAgg(unknownJoin(s, dir)))),
 
     // As-of join (beyond-reference operator): the J3/J4+A1 "latest dim
     // session ≤ CDR time" semantic in ONE pass — no candidate explosion,
     // one shuffle, per-partition sort (graft.operators.AsOfJoin scaladoc).
     // Output: exactly one enrichment row per exploded (CDR, ip) pair.
     "cdr_asof_enrich" -> ((s, dir) => {
-      val ext = CdrPipeline.extendWithPartitionCols(CdrTables.src(s, dir))
-      val left = CdrPipeline.explodeIps(ext.filter(col("imsi").isNull))
+      val left = CdrPipeline.explodeIps(ext(s, dir).filter(col("imsi").isNull))
       val enriched = graft.operators.AsOfJoin.leftAsOf(
         left, CdrTables.msIpExploded(s, dir),
         keys = Seq("probe", "ip"), leftTime = "start_time", rightTime = "start_time",

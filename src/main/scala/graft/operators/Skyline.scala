@@ -48,21 +48,11 @@ object Skyline {
   /** Plans through the custom [[graft.plans.SkylineNode]] /
     * [[graft.plans.SkylineExec]] operator (see that file for why the
     * physical form beats the typed-Dataset `mapPartitions` draft: no
-    * De/SerializeObject walls, survivors-only row copies). The strategy is
-    * registered imperatively so extension-less sessions (Verify/Bench
-    * build plain builders) plan it too; `GraftExtensions` injects the same
-    * object for cluster installs. */
+    * De/SerializeObject walls, survivors-only row copies). The session
+    * must carry [[graft.GraftExtensions]], which injects the planner
+    * strategy ([[graft.Sessions]] builds every session with it). */
   def apply(df: DataFrame, xCol: String, yCol: String): DataFrame = {
     val spark = df.sparkSession
-    // Registration is serialized and checked against the PLANNER's strategy
-    // list (experimental + extension-injected), so concurrent first calls
-    // can't double-append and a GraftExtensions session isn't registered a
-    // second time through the experimental list (advisor-caught).
-    Skyline.synchronized {
-      if (!spark.sessionState.planner.strategies.contains(graft.plans.SkylineStrategy))
-        spark.experimental.extraStrategies =
-          spark.experimental.extraStrategies :+ graft.plans.SkylineStrategy
-    }
     val clean = df.filter(df.col(xCol).isNotNull && df.col(yCol).isNotNull &&
       !df.col(yCol).cast("double").isNaN)
     val analyzed = org.apache.spark.sql.graft.PlanHooks.analyzed(clean)

@@ -12,9 +12,8 @@ import org.apache.spark.sql.types._
 /** Whole-operator plan integration for the 2-D Pareto skyline — the (c)-tier
   * extension rung the design brief reserves for semantics the built-in
   * operators can't express without a scale penalty: a custom logical node
-  * ([[SkylineNode]]), a planner strategy ([[SkylineStrategy]], injected via
-  * `GraftExtensions` and registered imperatively by
-  * [[graft.operators.Skyline.apply]] for extension-less sessions), and a
+  * ([[SkylineNode]]), a planner strategy ([[SkylineStrategy]], injected by
+  * `GraftExtensions`), and a
   * physical operator ([[SkylineExec]]) that runs the identical staircase
   * sweep directly over `InternalRow`s.
   *

@@ -120,15 +120,8 @@ object CdrStreamJob {
     * FOR SYSTEM_TIME AS OF proc_time semantics), stateful session dedup
     * (A1/A2), sink-schema union (P7/K4). */
   def enrichedStream(src: DataFrame, imsiMsisdn: DataFrame,
-                     msIpExploded: DataFrame, gapMs: Long = 1000L): DataFrame = {
-    val ext = CdrPipeline.extendWithPartitionCols(src)
-    val branch1 = CdrPipeline.projectToSink(
-      CdrPipeline.lookupEnrich(ext.filter(col("imsi").isNotNull), imsiMsisdn, "left_outer"))
-    val joined = CdrPipeline.rangeEnrich(
-      CdrPipeline.explodeIps(ext.filter(col("imsi").isNull)), msIpExploded, "left_outer")
-    val branch2 = CdrPipeline.projectToSink(SessionDedup(joined, gapMs).toDF())
-    branch1.unionByName(branch2)
-  }
+                     msIpExploded: DataFrame, gapMs: Long = 1000L): DataFrame =
+    CdrPipeline.twoBranch(src, imsiMsisdn, msIpExploded)(SessionDedup(_, gapMs).toDF())
 
   /** Production micro-batch runner: the whole batch pipeline per trigger,
     * dimensions from TTL caches (60 s — flink.conf:38,48), idempotent write

@@ -212,9 +212,6 @@ object CorpusIngest {
         col("classifier_ok"), col("is_keeper"), col("keep"))
   }
 
-  /** Idempotent per-batch write: trailing batch_id partition + dynamic
-    * overwrite — a replayed batch replaces its own output (replay
-    * idempotence is spec-asserted like CdrStreamJob.writeBatch's). */
   /** Cross-parameter invariants shared by [[gate]] and [[run]]. Validated at
     * [[run]] setup too (not just inside the per-batch [[gate]] call) so a
     * misconfigured stream fails before the StreamingQuery starts instead of
@@ -233,6 +230,9 @@ object CorpusIngest {
       "dsirRatios needs dsirMinScoreMicro > 0: imp_micro >= 0 always, so a zero threshold gates nothing")
   }
 
+  /** Idempotent per-batch write: trailing batch_id partition + dynamic
+    * overwrite — a replayed batch replaces its own output (replay
+    * idempotence is spec-asserted like CdrStreamJob.writeBatch's). */
   private[graft] def writeBatchPartition(out: DataFrame, batchId: Long,
                                          partCols: Seq[String], path: String,
                                          format: String): Unit =
@@ -310,16 +310,8 @@ object CorpusIngest {
             writeBatchPartition(
               JsonlDocs.quarantine(batch).select(col("_corrupt_record").as("value")),
               batchId, Nil, quarantineDir, "text")
-            shardDir.foreach { sd =>
-              val docs = kept.select(col("doc_id"), col("text"))
-              val st = docs.agg(count(lit(1)),
-                coalesce(sum(octet_length(col("text"))), lit(0L))).head()
-              if (st.getLong(0) > 0L)
-                graft.llm.TrainingShards.appendTrainingShards(docs, sd,
-                  graft.llm.TrainingShards.shardCountFor(
-                    st.getLong(1), st.getLong(0)),
-                  batchId + 1L)
-            }
+            shardDir.foreach(Maintenance.appendShards(
+              kept.select(col("doc_id"), col("text")), _, nShards = 0, batchId + 1L))
           } finally if (shardDir.isDefined) kept.unpersist()
           onBatchComplete(batchId)
         } finally batch.unpersist()

@@ -44,9 +44,6 @@ object StreamingLinkage {
     * join instead of OOMing on a forced broadcast. */
   val CleanDimMaxBytes: Long = 256L << 20
 
-  private def hintIfSmall(dim: DataFrame, maxBytes: Long): DataFrame =
-    graft.Util.broadcastIfSmall(dim, maxBytes)
-
   /** `dirtyStream` must carry the dirty-side schema (cust_b, b_name, nk,
     * b_cents, b_mkt); `clean` is the static clean dimension (cust_a,
     * a_name, nk, a_cents, a_mkt). Returns the match/possible pair stream
@@ -54,7 +51,7 @@ object StreamingLinkage {
   def link(dirtyStream: DataFrame, clean: DataFrame,
            dimMaxBytes: Long = CleanDimMaxBytes): DataFrame =
     RecordLinkage.scoreCandidates(
-      dirtyStream.join(hintIfSmall(clean, dimMaxBytes), "nk"))
+      dirtyStream.join(graft.Util.broadcastIfSmall(clean, dimMaxBytes), "nk"))
 
   /** Per-micro-batch confusion summary (the [[RecordLinkage.linkEval]]
     * cells keyed by batch) via foreachBatch — aggregation over a stream

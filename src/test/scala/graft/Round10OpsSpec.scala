@@ -158,7 +158,7 @@ class Round10OpsSpec extends SparkSpec {
     val p = java.nio.file.Files.createTempDirectory("graft-stream-art").toString
     graft.llm.Dedup.writeDedupArtifactHashed(seed, p, 0.3)
     val mem = MemoryStream[(Long, String)](spark)
-    val q = streaming.StreamingArtifact.run(mem.toDF().toDF("doc_id", "text"), p,
+    val q = streaming.Maintenance.dedupArtifact(mem.toDF().toDF("doc_id", "text"), p,
       java.nio.file.Files.createTempDirectory("graft-stream-art-ckpt").toString)
     try {
       mem.addData(b1: _*); q.processAllAvailable()

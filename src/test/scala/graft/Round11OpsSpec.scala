@@ -128,7 +128,7 @@ class Round11OpsSpec extends SparkSpec {
     val idx = java.nio.file.Files.createTempDirectory("graft-ivf-stream").toString
     Similarity.writeIvfIndexSized(seed, idx)
     val mem = MemoryStream[(Long, Array[Float])](spark)
-    val q = streaming.StreamingAnnIndex.run(
+    val q = streaming.Maintenance.annIndex(
       mem.toDF().toDF("vec_id", "embedding"), idx,
       java.nio.file.Files.createTempDirectory("graft-ivf-stream-ckpt").toString)
     try {

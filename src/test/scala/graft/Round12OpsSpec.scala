@@ -140,7 +140,7 @@ class Round12OpsSpec extends SparkSpec {
     TrainingShards.writePackedTokenShards(seed, streamed, 4, 3, 64)
     TrainingShards.writePackedTokenShards(seed, batched, 4, 3, 64)
     val mem = MemoryStream[(Long, String, String)](spark)
-    val q = streaming.StreamingShards.runPacked(
+    val q = streaming.Maintenance.packedShards(
       mem.toDF().toDF("doc_id", "source", "text"), streamed, 4,
       java.nio.file.Files.createTempDirectory("graft-pk-ckpt").toString)
     try {

@@ -180,7 +180,7 @@ class Round13OpsSpec extends SparkSpec {
     val r1 = d.filter($"doc_id" % 5 === 0).select($"doc_id").as[Long].collect().toSeq
     val r2 = d.filter($"doc_id" % 7 === 0).select($"doc_id").as[Long].collect().toSeq
     val mem = MemoryStream[Long](spark)
-    val q = streaming.StreamingTombstones.run(
+    val q = streaming.Maintenance.tombstones(
       mem.toDF().toDF("doc_id"), out,
       java.nio.file.Files.createTempDirectory("graft-st-tomb-ck").toString)
     try {

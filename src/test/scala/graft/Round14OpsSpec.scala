@@ -57,7 +57,7 @@ class Round14OpsSpec extends SparkSpec {
       d.filter($"doc_id" % 5 === 0).select("doc_id"), ingestBatch = 1L)
     val r2 = d.filter($"doc_id" % 7 === 0).select($"doc_id").as[Long].collect().toSeq
     val mem = MemoryStream[Long](spark)
-    val q = streaming.StreamingTombstones.run(mem.toDF().toDF("doc_id"), out, ck)
+    val q = streaming.Maintenance.tombstones(mem.toDF().toDF("doc_id"), out, ck)
     try { mem.addData(r2: _*); q.processAllAvailable() } finally q.stop()
     def active() = TrainingShards.activeSpans(spark, out)
       .collect().map(_.toString).sorted.toSeq
@@ -74,12 +74,12 @@ class Round14OpsSpec extends SparkSpec {
     // after the stream's own batches landed (max on disk is now 2) would
     // shift every replayed batch id onto a different partition and break
     // the exactly-once overwrite
-    assert(streaming.StreamingTombstones.offsetFor(spark, out, ck) == 2L,
+    assert(streaming.Maintenance.offsetFor(spark, out, ck) == 2L,
       "same checkpoint must reuse its persisted offset")
     // a FRESH checkpoint (fresh batch-id sequence) derives past everything
     // now on disk
     val ck2 = java.nio.file.Files.createTempDirectory("graft-off-ck2").toString
-    assert(streaming.StreamingTombstones.offsetFor(spark, out, ck2) == 3L,
+    assert(streaming.Maintenance.offsetFor(spark, out, ck2) == 3L,
       "a fresh checkpoint must mint an offset past every on-disk batch")
     // a PRE-UPGRADE checkpoint (committed batches, no offset file) pins
     // the legacy offset 1 — deriving past the on-disk batches would shift
@@ -89,7 +89,7 @@ class Round14OpsSpec extends SparkSpec {
       java.nio.file.Paths.get(ck3, "commits"))
     java.nio.file.Files.write(java.nio.file.Paths.get(ck3, "commits", "0"),
       "v1".getBytes)
-    assert(streaming.StreamingTombstones.offsetFor(spark, out, ck3) == 1L,
+    assert(streaming.Maintenance.offsetFor(spark, out, ck3) == 1L,
       "a checkpoint with committed batches but no offset file must pin " +
         "the legacy batchId+1 mapping")
   }
@@ -124,7 +124,7 @@ class Round14OpsSpec extends SparkSpec {
     val twin = java.nio.file.Files.createTempDirectory("graft-autoc-t").toString
     for (t <- Seq(p, twin)) Dedup.writeDedupArtifactHashed(slice(0), t, 0.3)
     val mem = MemoryStream[(Long, String)](spark)
-    val q = streaming.StreamingArtifact.run(mem.toDF().toDF("doc_id", "text"), p,
+    val q = streaming.Maintenance.dedupArtifact(mem.toDF().toDF("doc_id", "text"), p,
       java.nio.file.Files.createTempDirectory("graft-autoc-ck").toString,
       autoCompactEvery = 2)
     try {
@@ -143,6 +143,58 @@ class Round14OpsSpec extends SparkSpec {
       assert(partRows(p, part) == partRows(twin, part),
         s"auto-compacted maintainer diverged from the batch twin on $part")
     assert(spark.read.parquet(s"$p/pairs").count() > 0, "law vacuous")
+
+    // the same law on the IVF-PQ index (codes, vectors) and the packed
+    // shard store (spans, tokenizer/vocab), over three small batches: the
+    // build plus three batches is four partition dirs uncompacted
+    def tmp(prefix: String) = java.nio.file.Files.createTempDirectory(prefix).toString
+    def bounded(dir: String, parts: Seq[String], what: String): Unit =
+      parts.foreach(part => assert(partitionDirs(dir, part).size <= 3,
+        s"$what auto-compaction never fired on $part: ${partitionDirs(dir, part)}"))
+    def sameAsTwin(dir: String, twinDir: String, parts: Seq[String], what: String): Unit =
+      parts.foreach(part => assert(partRows(dir, part) == partRows(twinDir, part),
+        s"auto-compacted $what diverged from the batch twin on $part"))
+
+    val emb = Tables.table(spark, sf, "embeddings")
+      .select($"vec_id", $"embedding".cast("array<float>"))
+    def vslice(i: Int) = emb.filter($"vec_id" % 4 === i.toLong)
+    val idx = tmp("graft-autoc-pq")
+    val idxTwin = tmp("graft-autoc-pq-t")
+    for (t <- Seq(idx, idxTwin)) Similarity.writeIvfPqIndexSized(vslice(0), t)
+    val vmem = MemoryStream[(Long, Array[Float])](spark)
+    val vq = streaming.Maintenance.annIndex(vmem.toDF().toDF("vec_id", "embedding"),
+      idx, tmp("graft-autoc-pq-ck"), pq = true, autoCompactEvery = 2)
+    try {
+      for (i <- 1 to 3) {
+        vmem.addData(vslice(i).as[(Long, Array[Float])].collect().toSeq: _*)
+        vq.processAllAvailable()
+      }
+    } finally vq.stop()
+    for (i <- 1 to 3)
+      Similarity.appendIvfPqIndex(vslice(i), idxTwin, ingestBatch = i.toLong)
+    bounded(idx, Seq("codes", "vectors"), "IVF-PQ")
+    sameAsTwin(idx, idxTwin, Seq("codes", "vectors"), "IVF-PQ index")
+
+    def dslice(i: Int) = docs3.filter($"doc_id" % 4 === i.toLong)
+    val pk = tmp("graft-autoc-pk")
+    val pkTwin = tmp("graft-autoc-pk-t")
+    for (t <- Seq(pk, pkTwin)) TrainingShards.writePackedTokenShards(dslice(0), t, 2, 3, 64)
+    val pmem = MemoryStream[(Long, String, String)](spark)
+    val pq = streaming.Maintenance.packedShards(pmem.toDF().toDF("doc_id", "source", "text"),
+      pk, 2, tmp("graft-autoc-pk-ck"), autoCompactEvery = 2)
+    try {
+      for (i <- 1 to 3) {
+        pmem.addData(dslice(i).as[(Long, String, String)].collect().toSeq: _*)
+        pq.processAllAvailable()
+      }
+    } finally pq.stop()
+    for (i <- 1 to 3)
+      TrainingShards.appendPackedTokenShards(dslice(i), pkTwin, 2, ingestBatch = i.toLong)
+    bounded(pk, Seq("spans", "tokenizer/vocab"), "packed store")
+    sameAsTwin(pk, pkTwin, Seq("spans", "tokenizer/vocab"), "packed store")
+    assert(TrainingShards.readPackedSpans(spark, pk).collect().map(_.toString).sorted.toSeq ==
+      TrainingShards.readPackedSpans(spark, pkTwin).collect().map(_.toString).sorted.toSeq,
+      "auto-compacted packed store reads different spans than its batch twin")
   }
 
   test("dedup coverage record: round-trips, measures label churn at maintenance, gates rebuild on growth OR measured staleness") {
@@ -536,7 +588,7 @@ class Round14OpsSpec extends SparkSpec {
     // restart the maintainer over the crashed store: the next trigger's
     // compactPart recovers (rolls the swap forward) before compacting
     val mem = MemoryStream[(Long, String)](spark)
-    val q = streaming.StreamingArtifact.run(mem.toDF().toDF("doc_id", "text"), p,
+    val q = streaming.Maintenance.dedupArtifact(mem.toDF().toDF("doc_id", "text"), p,
       java.nio.file.Files.createTempDirectory("graft-autoc-cr-ck").toString,
       autoCompactEvery = 1)
     try {

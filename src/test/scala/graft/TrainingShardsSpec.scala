@@ -151,7 +151,7 @@ class TrainingShardsSpec extends SparkSpec {
     TrainingShards.writeTrainingShards(seed, streamed, 4)
     TrainingShards.writeTrainingShards(seed, batched, 4)
     val mem = MemoryStream[(Long, String)](spark)
-    val q = streaming.StreamingShards.run(mem.toDF().toDF("doc_id", "text"),
+    val q = streaming.Maintenance.trainingShards(mem.toDF().toDF("doc_id", "text"),
       streamed, 4,
       java.nio.file.Files.createTempDirectory("graft-shards-ckpt").toString)
     try {

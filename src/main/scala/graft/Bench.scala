@@ -1,4 +1,8 @@
 package graft
+import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -51,26 +55,24 @@ object Bench {
     // A latest-run baseline decays whenever a noisy run lands (each stalled
     // sample raises the bar the next run is judged against); the fold keeps
     // the re-run gate anchored to the machine's demonstrated-fastest times.
-    // Missing/unparsable file ⇒ no re-runs.
-    def readFile(p: String): Option[String] =
-      scala.util.Try(new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(p)), "UTF-8")).toOption
-    // a baseline recorded at another scale factor would mis-gate every query
-    // (sf0.01 minima make every sf0.1 sample look 10× regressed); a file with
-    // no sf field (hand-authored override) is accepted as-is
-    def sfMatches(text: String): Boolean =
-      """"sf":"([^"]*)"""".r.findFirstMatchIn(text).forall(_.group(1) == sfDir)
-    def parseTimes(text: String): Map[String, Double] =
-      """"([a-z0-9_]+)":([0-9][0-9.]*)""".r.findAllMatchIn(text)
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap -- Seq("value", "sf")
+    // Missing/unparsable file ⇒ no re-runs. A baseline recorded at another
+    // scale factor would mis-gate every query (sf0.01 minima make every
+    // sf0.1 sample look 10× regressed); a file with no sf field
+    // (hand-authored override) is accepted as-is
+    def sfMatches(rec: JsonNode): Boolean = Option(rec.get("sf")).forall(_.asText == sfDir)
+    // a failed query's -1 is not a floor
+    def times(rec: JsonNode): Map[String, Double] =
+      Option(rec.get("queries")).toSeq.flatMap(_.properties.asScala)
+        .map(e => e.getKey -> e.getValue)
+        .collect { case (k, v) if v.isNumber && v.asDouble >= 0 => k -> v.asDouble }.toMap
     val baseline: Map[String, Double] =
       sys.env.get("BENCH_BASELINE").map(Seq(_)).getOrElse(
         // CWD-relative first (local iteration), repo-absolute fallback (a
         // driver running from elsewhere must not silently lose the baseline)
         Seq("BENCH_BEST.json", "/root/repo/BENCH_BEST.json",
           "BENCH_LOCAL.json", "/root/repo/BENCH_LOCAL.json"))
-        .iterator.flatMap(readFile).find(sfMatches)
-        .map(parseTimes).getOrElse(Map.empty)
+        .iterator.flatMap(Util.readJson).find(sfMatches)
+        .map(times).getOrElse(Map.empty)
     def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       // per-query hygiene: drop any storage blocks a previous query left
       // (localCheckpoint etc.) and compact the heap, so measurements are
@@ -132,19 +134,17 @@ object Bench {
       System.err.println(f"[bench] $name%-24s $dt%8.2f s")
       name -> dt
     }
-    val qjson = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
     val total = results.filter(_._2 >= 0).map(_._2).sum
     // errors = queries with NO successful rep (a query that succeeded in
-    // one rep reports its time; the per-attempt failure list is stderr-only)
-    val errJson = results.collect { case (k, v) if v < 0 => "\"" + k + "\"" }
-      .mkString("[", ",", "]")
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","protocol":"best-of-2-min","queries":$qjson,"errors":$errJson,"sf":"$sfDir"}"""
-    println(json)
-    // also persist to a file: the driver captures a bounded stdout tail, and
-    // at 76+ queries the one-line JSON outgrew it (BENCH_r03.json arrived
-    // truncated mid-object with parsed=null). BENCH_OUT overrides the path.
-    Util.writeJson("BENCH_OUT", "BENCH_LOCAL.json", json)
+    // one rep reports its time; the per-attempt failure list is stderr-only).
+    // The line is also persisted: a bounded stdout capture keeps only a
+    // tail, and at 76+ queries the one-line JSON outgrew it (BENCH_r03.json
+    // arrived truncated mid-object with parsed=null). BENCH_OUT overrides
+    // the path.
+    Util.writeJson("BENCH_OUT", "BENCH_LOCAL.json", ListMap("metric" -> "total",
+      "value" -> total, "unit" -> "sec", "protocol" -> "best-of-2-min",
+      "queries" -> ListMap.from(results),
+      "errors" -> results.collect { case (k, v) if v < 0 => k }, "sf" -> sfDir))
     // Fold this run's successful times into the best-of baseline (per-query
     // min). The stdout/BENCH_OUT JSON above stays the HONEST current-run
     // measurement; this file is only the re-run gate's reference. Queries no
@@ -152,13 +152,13 @@ object Bench {
     val best = (baseline.view.filterKeys(SparkEntry.queries.keySet).toMap ++
       results.collect { case (k, v) if v >= 0 =>
         k -> math.min(v, baseline.getOrElse(k, Double.MaxValue)) }).toSeq.sortBy(_._1)
-    val bestJson = s"""{"metric":"total","value":${best.map(_._2).sum},"unit":"sec","queries":${
-      best.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")},"sf":"$sfDir"}"""
     // an explicit override is read-only, and a best file recorded at another
     // scale factor must not be clobbered by a local run at a different SF
     val bestPath = sys.env.getOrElse("BENCH_BEST_OUT", "BENCH_BEST.json")
-    if (!sys.env.contains("BENCH_BASELINE") && readFile(bestPath).forall(sfMatches))
-      Util.writeJson("BENCH_BEST_OUT", "BENCH_BEST.json", bestJson)
+    if (!sys.env.contains("BENCH_BASELINE") && Util.readJson(bestPath).forall(sfMatches))
+      Util.writeJson("BENCH_BEST_OUT", "BENCH_BEST.json", ListMap("metric" -> "total",
+        "value" -> best.map(_._2).sum, "unit" -> "sec",
+        "queries" -> ListMap.from(best), "sf" -> sfDir), echo = false)
     spark.stop()
     if (results.exists(_._2 < 0)) sys.exit(1)
   }

@@ -1,5 +1,9 @@
 package graft
 
+import com.fasterxml.jackson.core.json.JsonWriteFeature
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{broadcast, col}
 
@@ -22,14 +26,31 @@ object Util {
     if (unknown || size <= BigInt(maxBytes)) broadcast(dim) else dim
   }
 
-  /** Shared measurement-JSON persistence for [[Bench]] and [[Tools]]:
-    * stdout tails get truncated by a bounded capture, a file does not.
-    * `envVar` overrides `defaultPath`; failure to write is a warning,
-    * never a run failure. */
-  def writeJson(envVar: String, defaultPath: String, json: String): Unit = {
+  /** The one JSON serializer of every measurement record (Bench, Verify,
+    * [[Tools]]): Jackson with the Scala module, so an ordered Scala map
+    * keeps its key order and every string is escaped by the library.
+    * Non-ASCII is escaped too: stdout's charset may be ASCII, and the
+    * printed line must parse to the same record as the UTF-8 file. */
+  private val mapper = JsonMapper.builder().addModule(DefaultScalaModule)
+    .enable(JsonWriteFeature.ESCAPE_NON_ASCII).build()
+
+  def json(value: Any): String = mapper.writeValueAsString(value)
+
+  /** The record at `path`, or None when it is missing or unparsable. */
+  def readJson(path: String): Option[JsonNode] =
+    scala.util.Try(mapper.readTree(new java.io.File(path))).toOption
+
+  /** Print `record` as one JSON line on stdout (unless `echo` is off) and
+    * persist the same line: stdout tails get truncated by a bounded
+    * capture, a file does not. `envVar` overrides `defaultPath`; failure
+    * to write is a warning, never a run failure. */
+  def writeJson(envVar: String, defaultPath: String,
+                record: collection.Map[String, Any], echo: Boolean = true): Unit = {
+    val line = json(record)
+    if (echo) println(line)
     val outPath = sys.env.getOrElse(envVar, defaultPath)
     try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-      (json + "\n").getBytes("UTF-8"))
+      (line + "\n").getBytes("UTF-8"))
     catch { case e: Throwable =>
       System.err.println(s"[json-out] could not write $outPath: ${e.getMessage}")
     }

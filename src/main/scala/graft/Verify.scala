@@ -1,5 +1,7 @@
 package graft
 import java.nio.file.{Files, Paths}
+
+import scala.collection.immutable.ListMap
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -37,27 +39,13 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      Util.json(SparkEntry.oracleSql))
     // Run manifest: which queries this dump attempted and which crashed —
     // lets the checker fail on a query that died before writing parquet
     // instead of mistaking its absence for "not in this subset run".
-    def arr(xs: Seq[String]): String = xs.map(q).mkString("[", ",", "]")
-    Files.writeString(Paths.get(s"$outDir/manifest.json"),
-      s"""{"attempted": ${arr(attempted.result())}, "failed": ${arr(failed.result())}}""")
+    Files.writeString(Paths.get(s"$outDir/manifest.json"), Util.json(ListMap(
+      "attempted" -> attempted.result(), "failed" -> failed.result())))
     spark.stop()
   }
 }

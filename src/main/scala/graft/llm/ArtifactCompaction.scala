@@ -74,14 +74,19 @@ object ArtifactCompaction {
       .partitionBy("ingest_batch").parquet(partPath)
 
   /** The parquet at `path`, or None when it does not exist or has no
-    * schema-bearing files (a part built from zero rows). Any other
+    * schema-bearing files (a part built from zero rows). A missing path is
+    * checked before reading, not caught: a failed read is a failed query
+    * execution that every execution listener hears. Any other
     * AnalysisException (a footer problem surfaced at read planning, a
     * schema conflict) propagates: callers fall back to an empty store,
     * and that must never paper over a damaged one. */
   private[graft] def readOptional(spark: SparkSession,
-                                  path: String): Option[DataFrame] =
-    try Some(spark.read.parquet(path))
+                                  path: String): Option[DataFrame] = {
+    val p = new Path(path)
+    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) None
+    else try Some(spark.read.parquet(path))
     catch { case e: AnalysisException if missingParquet(e) => None }
+  }
 
   /** The "this parquet doesn't exist / has no schema-bearing files"
     * conditions — one list, so a Spark version renaming either condition

@@ -3,6 +3,10 @@ package graft.llm
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.zip.{ZipEntry, ZipOutputStream}
 
+import scala.concurrent.Await
+import scala.concurrent.duration.DurationInt
+import scala.util.Try
+
 import graft.Util
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -1361,8 +1365,11 @@ object TrainingShards {
     // the NULL-source guard rides the counts checkpoint as an Observation
     // instead of its own count() — previously a full extra pass over the
     // spans + tombstone-anti-join chain purely to validate (guide §1.2);
-    // packPlanFromCounts materializes eagerly, so the metric is available
-    // (and the require fires) before anything is written under _rebuild/
+    // packPlanFromCounts materializes eagerly, so the metric is normally
+    // available (and the require fires) before anything is written under
+    // _rebuild/. The wait is bounded: should the metric not arrive (the
+    // observed plan ran outside a Dataset action), the guard counts NULL
+    // sources on the already-checkpointed counts instead of hanging.
     val nullSrcObs = org.apache.spark.sql.Observation("rebuild-null-source")
     val plan = packPlanFromCounts(
       surviving
@@ -1370,9 +1377,10 @@ object TrainingShards {
           sum(when(col("source").isNull, 1L).otherwise(0L)).as("null_src"))
         .groupBy("doc_id", "source")
         .agg(sum(col("n_tokens")).as("n_tokens")), budget, bounds)
-    val nullSource = nullSrcObs.get.getOrElse("null_src", null) match {
-      case l: java.lang.Long => l.longValue
-      case _ => 0L // sum over zero rows — an empty survivor set is legal
+    val nullSource = Try(Await.result(nullSrcObs.future, 30.seconds)).toOption match {
+      // a NULL sum is a sum over zero rows — an empty survivor set is legal
+      case Some(row) => if (row.isNullAt(0)) 0L else row.getLong(0)
+      case None => plan.counts.filter(col("source").isNull).count()
     }
     require(nullSource == 0L,
       s"$dir: $nullSource surviving span rows have NULL source (batches " +

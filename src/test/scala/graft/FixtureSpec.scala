@@ -132,4 +132,32 @@ class FixtureSpec extends SparkSpec {
       assert(got == (if (c == 0) orig else s"$orig c$c"), s"copy $c: '$got'") }
     assert(texts(salt = false).forall { case (_, orig, got) => got == orig })
   }
+
+  test("Tools.Probe record: a skipped section holds -1 and its reason; one ASCII JSON line, keys in insertion order, strings escaped") {
+    import scala.jdk.CollectionConverters._
+    val p = new Tools.Probe(spark, "spec", skip = "gone")
+    val awkward = "quote\" backslash\\ tab\t cr\r soh\u0001 dash\u2014 end"
+    p.put("metric", "probe_spec")
+    p.put("text", awkward)
+    p.section("kept", "kept_why" -> "never recorded", "kept_rows", "kept_sec") {
+      p.counted("kept phase", "kept_rows", "kept_sec")(spark.range(3).count())
+    }
+    p.section("gone", "gone_why" -> "answer-size-bound", "gone_rows", "gone_sec") {
+      fail("a skipped section ran")
+    }
+    val out = new java.io.ByteArrayOutputStream()
+    Console.withOut(out)(p.emit(None))
+    val lines = out.toString("UTF-8").split("\n").toSeq
+    // one line of printable ASCII: stdout's charset may not be UTF-8
+    assert(lines.size == 1 && lines.head.forall(c => c >= ' ' && c < '\u007f'), lines)
+    val rec = new com.fasterxml.jackson.databind.ObjectMapper().readTree(lines.head)
+    def keys(n: com.fasterxml.jackson.databind.JsonNode) = n.properties.asScala.toSeq.map(_.getKey)
+    assert(keys(rec) ==
+      Seq("metric", "text", "skipped", "kept_sec", "kept_rows", "gone_rows", "gone_sec"))
+    assert(rec.get("text").asText == awkward)
+    assert(rec.get("kept_rows").asLong == 3L)
+    assert(rec.get("gone_rows").asLong == -1L && rec.get("gone_sec").asLong == -1L)
+    assert(keys(rec.get("skipped")) == Seq("gone_why"))
+    assert(rec.get("skipped").get("gone_why").asText == "answer-size-bound")
+  }
 }

@@ -265,6 +265,27 @@ class Round14OpsSpec extends SparkSpec {
       !new java.io.File(s"$out/_rebuild-plan").exists())
   }
 
+  test("rebuild refuses a store whose spans carry a NULL source, before writing anything under _rebuild/") {
+    val out = java.nio.file.Files.createTempDirectory("graft-rbnull").toString
+    TrainingShards.writePackedTokenShards(docs3, out, 4, 3, 64)
+    // one surviving document's spans lose their source, as rows written
+    // before the span-source convention read under the merged schema
+    val spans = spark.read.parquet(s"$out/spans")
+    val batch = spans.agg(max($"ingest_batch").cast("long")).as[Long].head()
+    val victim = spans.agg(min($"doc_id")).as[Long].head()
+    val nulled = spans.drop("ingest_batch")
+      .withColumn("source", when($"doc_id" === victim, lit(null).cast("string"))
+        .otherwise($"source"))
+      .localCheckpoint(true)
+    graft.llm.ArtifactCompaction.writeBatch(nulled, s"$out/spans", batch, dynamic = false)
+    val e = intercept[IllegalArgumentException] {
+      TrainingShards.rebuildPackedStore(spark, out, 4)
+    }
+    assert(e.getMessage.contains("NULL source"), e.getMessage)
+    assert(!new java.io.File(s"$out/_rebuild").exists() &&
+      !new java.io.File(s"$out/_rebuild-plan").exists())
+  }
+
   test("rebuild == a fresh pack of the SURVIVORS' text under the STORED tokenizer; layout metadata consistent; audit preserved") {
     val out = java.nio.file.Files.createTempDirectory("graft-rb1").toString
     val d = docs3

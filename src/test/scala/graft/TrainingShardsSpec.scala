@@ -217,7 +217,27 @@ class TrainingShardsSpec extends SparkSpec {
 
   test("part protocol: readOptional is None only for a missing or schema-less part; other analysis errors propagate") {
     val missing = tmpPart("missing")
-    assert(ArtifactCompaction.readOptional(spark, missing).isEmpty)
+    // a missing part is found by a check, not by a failed read: a failed
+    // read is a failed query execution that every execution listener
+    // hears. The marker query after it is delivered after any failure the
+    // probe caused (one listener bus, in posting order).
+    val failedOnMissing = new java.util.concurrent.atomic.AtomicInteger(0)
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String,
+                    qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        if (qe.analyzed.schema.fieldNames.contains("read_optional_marker")) markerSeen.countDown()
+      def onFailure(funcName: String,
+                    qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit =
+        if (String.valueOf(exception.getMessage).contains(missing)) failedOnMissing.incrementAndGet()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      assert(ArtifactCompaction.readOptional(spark, missing).isEmpty)
+      spark.range(1).toDF("read_optional_marker").collect()
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(failedOnMissing.get() == 0, "readOptional issued a failing read of a missing part")
+    } finally spark.listenerManager.unregister(listener)
     // an existing directory with no data files (UNABLE_TO_INFER_SCHEMA)
     val bare = tmpPart("bare")
     new java.io.File(bare).mkdirs()

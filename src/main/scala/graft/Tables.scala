@@ -34,24 +34,21 @@ object Tables {
     spark.read.parquet(s"$sfDir/$name.parquet")
   }
 
-  /** Repartition up ONLY when the scan yields fewer partitions than
-    * `minPartitions`. A parquet row group is atomic to a scan task, so a
-    * small fixture written as one row group (the r6-regenerated testdata:
-    * parquet-cpp-arrow 16.1.0, single-rg files) funnels every narrow
-    * per-row stage — the shingle/split/hash batteries that dominate the
-    * doc_* operators — through ONE core until the first shuffle. At real
-    * scale the scan already produces thousands of partitions and this is
-    * a no-op returning `df` unchanged (no shuffle added); the round-robin
-    * shuffle only ever moves a sub-row-group-sized input.
-    */
-  def ensureParallelism(df: DataFrame, minPartitions: Int): DataFrame =
-    if (df.rdd.getNumPartitions >= minPartitions) df else df.repartition(minPartitions)
-
-  /** The `.rdd` probe in [[ensureParallelism]] costs a physical planning of
-    * the scan; fixture layout is static for a process lifetime, so pay it
-    * once per (path, floor) instead of once per query. */
+  /** Pays the `.rdd` probe in [[flooredTable]] (a physical planning of the
+    * scan) once per path instead of once per query: fixture
+    * layout is static for a process lifetime. */
   private val scanPartsCache = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
 
+  /** `name` repartitioned up to the session's default parallelism ONLY
+    * when its scan yields fewer partitions. A parquet row group is atomic
+    * to a scan task, so a small fixture written as one row group (the
+    * r6-regenerated testdata: parquet-cpp-arrow 16.1.0, single-rg files)
+    * funnels every narrow per-row stage — the shingle/split/hash batteries
+    * that dominate the doc_* operators — through ONE core until the first
+    * shuffle. At real scale the scan already produces thousands of
+    * partitions and this returns the scan unchanged (no shuffle added);
+    * the round-robin shuffle only ever moves a sub-row-group-sized
+    * input. */
   private def flooredTable(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val df = table(spark, sfDir, name)
     val floor = spark.sparkContext.defaultParallelism

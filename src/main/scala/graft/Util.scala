@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions.{broadcast, col}
 object Util {
 
   /** SIZE-CONDITIONAL broadcast hint — the one safety-relevant broadcast
-    * convention shared by every dim-join in the repo (CdrPipeline,
-    * StreamingLinkage): known-small → hint; known-big → unhinted (graceful
+    * convention shared by every dim-join in the repo (CdrPipeline, the
+    * spec-side StreamingLinkage under `src/test`): known-small → hint; known-big → unhinted (graceful
     * degrade to Catalyst's own strategy instead of a 3am broadcast OOM);
     * UNKNOWN (stats at the `defaultSizeInBytes` sentinel — e.g. a raw
     * stats-less `spark.read.jdbc` dim) → hint, preserving the pipeline's

@@ -73,20 +73,35 @@ object ArtifactCompaction {
       .option("partitionOverwriteMode", if (dynamic) "dynamic" else "static")
       .partitionBy("ingest_batch").parquet(partPath)
 
-  /** The parquet at `path`, or None when it does not exist or has no
-    * schema-bearing files (a part built from zero rows). A missing path is
-    * checked before reading, not caught: a failed read is a failed query
-    * execution that every execution listener hears. Any other
+  /** The parquet at `path`, or None when it does not exist or has no data
+    * files (a part built from zero rows, a bare directory) — checked by a
+    * listing, because a failed read is a failed query execution that every
+    * execution listener hears; the catch covers a part deleted between the
+    * listing and the read. Any other
     * AnalysisException (a footer problem surfaced at read planning, a
     * schema conflict) propagates: callers fall back to an empty store,
     * and that must never paper over a damaged one. */
   private[graft] def readOptional(spark: SparkSession,
                                   path: String): Option[DataFrame] = {
     val p = new Path(path)
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) None
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val hasData =
+      try hasDataFile(fs, p)
+      catch { case _: java.io.FileNotFoundException => false } // missing
+    if (!hasData) None
     else try Some(spark.read.parquet(path))
     catch { case e: AnalysisException if missingParquet(e) => None }
   }
+
+  /** Whether a recursive listing under `p` finds a data file. Like Spark's
+    * own listing, it skips names starting with `_` or `.` (`_SUCCESS`,
+    * `_temporary`, `.crc`, compaction scratch) and everything under them. */
+  private def hasDataFile(fs: FileSystem, p: Path): Boolean =
+    fs.listStatus(p).exists { s =>
+      val n = s.getPath.getName
+      !n.startsWith("_") && !n.startsWith(".") &&
+        (s.isFile || hasDataFile(fs, s.getPath))
+    }
 
   /** The "this parquet doesn't exist / has no schema-bearing files"
     * conditions — one list, so a Spark version renaming either condition

@@ -251,19 +251,15 @@ object BpeTrainer {
     * [[bpeTokenCounts]] exactly (that identity IS the oracle for
     * `text_bpe_apply`). */
   /** The stored-merge inference kernel: replay `ms` (training order) over
-    * one word, return its final symbol count. Split by CODE POINTS, not
+    * one word. Split by CODE POINTS, not
     * UTF-16 code units — the trainer's substring(word, i, 1) counts code
     * points, so a supplementary-plane character must stay one symbol here
     * too or the replay diverges. The presence filter is stale-tolerant
     * (symbols ever seen in this word): extra entries only cost a scan,
-    * never change the result. Shared by the batch apply and
-    * [[graft.streaming.StreamingBpe]]. */
-  private[graft] def replayWord(ms: Array[(String, String)], w: String): Int =
-    replayWordSyms(ms, w).length
-
-  /** [[replayWord]]'s sequence form: the word's final SYMBOLS after the
-    * replay, in order — what the packed-shard append path consumes (it
-    * needs token ids per position, not just a count). */
+    * never change the result. Returns the word's final SYMBOLS after the
+    * replay, in order: the packed-shard append path needs token ids per
+    * position, the batch apply and `graft.streaming.StreamingBpe` (a
+    * spec-side twin under `src/test`) only their count. */
   private[graft] def replayWordSyms(ms: Array[(String, String)], w: String): Array[String] = {
     var syms: Array[String] = {
       val out = new Array[String](w.codePointCount(0, w.length))

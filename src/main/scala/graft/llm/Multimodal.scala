@@ -194,8 +194,8 @@ object Multimodal {
     * `decode_ok = false` and null geometry instead of an exception. At
     * 100 TB a corrupt payload is ROUTINE — the strict form's `require`
     * would kill the whole job for one bad object, so production pipelines
-    * route failures to a quarantine (see
-    * [[graft.streaming.MediaIngest]]) and keep going; the strict form
+    * route failures to a quarantine (see `graft.streaming.MediaIngest`, a
+    * spec-side sink under `src/test`) and keep going; the strict form
     * stays the fixture-oracle assertion that OUR generated payloads all
     * decode. */
   def decodeBatchSafe(media: DataFrame): DataFrame = {
@@ -246,7 +246,7 @@ object Multimodal {
     StructField("decode_ok", BooleanType)))
 
   /** Modality-dispatched poison-tolerant PROBE — the uniform validation
-    * gate [[graft.streaming.MediaIngest]] routes on: each payload is
+    * gate `graft.streaming.MediaIngest` routes on: each payload is
     * opened by the codec its `format` column names ('wav' → AudioSystem
     * container parse, 'gif' → frame-directory scan, 'zip' → [[ShardZip]]
     * central-directory read, anything else → ImageIO decode), and reduces

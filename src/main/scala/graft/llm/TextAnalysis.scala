@@ -215,7 +215,8 @@ object TextAnalysis {
     * by |S|·B), a broadcast ref join, and a per-source rollup — nothing
     * after the first aggregation is corpus-sized. B is a constant knob,
     * so state/intermediates are FIXED-size per source — which is exactly
-    * what lets [[graft.streaming.StreamingDrift]] run the same math with
+    * what lets `graft.streaming.StreamingDrift` (the spec-side twin under
+    * `src/test`) run the same math with
     * bounded keyed state on an unbounded stream. */
   def driftVsReference(bucketed: DataFrame, ref: DataFrame,
                        nBuckets: Int): DataFrame = {
@@ -276,7 +277,7 @@ object TextAnalysis {
       nBuckets)
 
   /** One (source, bucket) row per token, bucket = xxhash64(token) % B —
-    * shared by the hashed drift twin and [[graft.streaming.StreamingDrift]]
+    * shared by the hashed drift twin and `graft.streaming.StreamingDrift`
     * (both sides of the prefix-parity spec must hash identically). */
   def hashBucketed(docs: DataFrame, nBuckets: Int): DataFrame =
     docs.select(col("source"), explode(split(col("text"), " ")).as("token"))
@@ -286,7 +287,7 @@ object TextAnalysis {
     * [[writeDsirRatios]]/[[graft.llm.Dedup.writeNearDupIndex]] deployment
     * pattern: the reference corpus is scanned ONCE into a ≤B-row
     * (bucket, ref_n) parquet table; every later monitoring run (batch
-    * audit or the [[graft.streaming.StreamingDrift]] bootstrap) reads the
+    * audit or the `graft.streaming.StreamingDrift` bootstrap) reads the
     * table instead of re-scanning the reference. */
   def writeDriftRef(refDocs: DataFrame, path: String, nBuckets: Int = 64): Unit =
     // DENSE snapshot — every bucket 0..B-1 present (ref_n = 0 where the
@@ -308,7 +309,7 @@ object TextAnalysis {
     * Rejects a snapshot whose bucket count differs from `nBuckets`: the
     * chi² pairing is positional in bucket id, so a B mismatch would not
     * error — it would quietly misattribute mass (the same guard
-    * [[graft.streaming.StreamingDrift]] applies to its bootstrap vector). */
+    * `graft.streaming.StreamingDrift` applies to its bootstrap vector). */
   def driftVsStoredRef(docs: DataFrame, path: String,
                        nBuckets: Int = 64): DataFrame = {
     val ref = docs.sparkSession.read.parquet(path)

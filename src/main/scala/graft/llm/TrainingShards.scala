@@ -104,25 +104,33 @@ object TrainingShards {
       ingestBatch = batch, dynamic = true)
   }
 
-  /** Append with the shard count DERIVED from the increment's size (one
-    * increment-sized agg), so a small daily increment mints one
-    * right-sized container instead of a fixed count of near-empty ones —
-    * the build's `nShards` is a corpus-sizing decision that must not be
-    * replayed verbatim onto every increment. */
+  /** Ad-hoc [[appendSized]]: shard count sized from the increment, batch
+    * id from the stored manifest (batch 0 is the build's, so a manifest
+    * with no rows starts at 1). */
   def appendTrainingShards(newDocs: DataFrame, dir: String): Unit = {
-    // persist: the sizing agg and the container write are two actions —
-    // a nondeterministic input (sampled/shuffled upstream) could be sized
-    // against a different materialization than the one written, tripping
-    // the entries bound or misshaping shards (review-caught; CorpusIngest
-    // persists its gated frame for the same reason)
+    // persist: a nondeterministic input (sampled/shuffled upstream) sized
+    // against a different materialization than the one written could trip
+    // the entries bound or misshape shards
     newDocs.persist()
-    try {
-      val st = newDocs.agg(count(lit(1)),
-        coalesce(sum(octet_length(col("text"))), lit(0L))).head()
-      // batch 0 is the build's: a manifest with no rows starts at 1
-      appendTrainingShards(newDocs, dir, shardCountFor(st.getLong(1), st.getLong(0)),
-        ArtifactCompaction.nextBatch(newDocs.sparkSession, s"$dir/manifest", 1L))
-    } finally newDocs.unpersist()
+    try appendSized(newDocs, dir, nShards = 0,
+      ArtifactCompaction.nextBatch(newDocs.sparkSession, s"$dir/manifest", 1L))
+    finally newDocs.unpersist()
+  }
+
+  /** Append `docs` as batch `ingestBatch`, skipping an empty increment.
+    * One one-row aggregate is both the empty check and, when
+    * `nShards <= 0`, the increment's size for [[shardCountFor]], so a small
+    * daily increment mints one right-sized container instead of a fixed
+    * count of near-empty ones. The caller persists `docs`: the aggregate
+    * and the container write must see one materialization. */
+  private[graft] def appendSized(docs: DataFrame, dir: String, nShards: Int,
+                                 ingestBatch: Long): Unit = {
+    val bytes = if (nShards > 0) lit(0L) else coalesce(sum(octet_length(col("text"))), lit(0L))
+    val st = docs.agg(count(lit(1)), bytes).head()
+    if (st.getLong(0) > 0L)
+      appendTrainingShards(docs, dir,
+        if (nShards > 0) nShards else shardCountFor(st.getLong(1), st.getLong(0)),
+        ingestBatch)
   }
 
   /** Containers an increment of `payloadBytes` / `nDocs` entries should

@@ -34,7 +34,8 @@ import org.apache.spark.sql.types._
   * partial rows (#partitions × #cols), never the value set. The exact
   * distinct count is the oracle-checkable form; cheaper production twins
   * are `approx_count_distinct` (HLL) or the KMV-sketched running profile
-  * in [[graft.streaming.StreamingProfile]].
+  * in `graft.streaming.StreamingProfile` (a spec-side twin under
+  * `src/test`).
   *
   * Values ride a two-typed encoding (num: long, str: string) so one stack
   * schema fits every column, ordered numerically where the source is

@@ -513,8 +513,8 @@ object RelQueries {
     // hopping/sliding event-time window: 1h windows every 30m — each event
     // lands in exactly 2 overlapping windows. The oracle reproduces Spark's
     // epoch-aligned window starts with integer-µs floor arithmetic; the
-    // streaming twin is EventWindows.hoppingCounts (same logical expression
-    // under a watermark)
+    // streaming twin is EventWindows.hoppingCounts, spec-side under
+    // src/test (same logical expression under a watermark)
     "q_hopping_window" -> ((s, dir) => {
       Tables.events(s, dir)
         .groupBy(window(col("ts"), "1 hour", "30 minutes").as("w"), col("event_type"))

@@ -152,18 +152,22 @@ object CdrStreamJob {
       }
       .start()
 
-  /** Idempotent per-micro-batch parquet write: Hive layout
+  /** Idempotent per-micro-batch write: Hive layout
     * `event_date/probe/batch_id` with `partitionOverwriteMode=dynamic`, so
     * re-running the same (deterministic) batch replaces its own output
     * in place. `batch_id` trails the reference's partition columns, so
     * `event_date`/`probe` pruning is unchanged; readers of the table see one
-    * extra partition column (documented layout delta vs flink.conf:56). */
+    * extra partition column (documented layout delta vs flink.conf:56).
+    * The corpus and media ingests pass their own `partCols` and `format`;
+    * `maxRecordsPerFile <= 0` leaves the file-size cap unset. */
   def writeBatch(out: DataFrame, batchId: Long, path: String,
-                 maxRecordsPerFile: Long = 1000000L): Unit =
-    out.withColumn("batch_id", lit(batchId))
+                 maxRecordsPerFile: Long = 1000000L,
+                 partCols: Seq[String] = Seq("event_date", "probe"),
+                 format: String = "parquet"): Unit = {
+    val w = out.withColumn("batch_id", lit(batchId))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .partitionBy("event_date", "probe", "batch_id")
-      .parquet(path)
+    (if (maxRecordsPerFile > 0) w.option("maxRecordsPerFile", maxRecordsPerFile) else w)
+      .partitionBy(partCols :+ "batch_id": _*).format(format).save(path)
+  }
 }

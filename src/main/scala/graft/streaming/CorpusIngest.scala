@@ -31,7 +31,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *    state.
   *  - Delivery is EFFECTIVELY-once, not sink-transactional: both sinks
   *    write under a trailing `batch_id` partition with dynamic partition
-  *    overwrite (the [[CdrStreamJob.writeBatch]] pattern), so a batch
+  *    overwrite (both through [[CdrStreamJob.writeBatch]]), so a batch
   *    replayed after a crash-before-checkpoint overwrites its own
   *    partitions instead of appending duplicates. A plain foreachBatch
   *    append would be at-least-once — duplicate documents in a training
@@ -230,19 +230,6 @@ object CorpusIngest {
       "dsirRatios needs dsirMinScoreMicro > 0: imp_micro >= 0 always, so a zero threshold gates nothing")
   }
 
-  /** Idempotent per-batch write: trailing batch_id partition + dynamic
-    * overwrite — a replayed batch replaces its own output (replay
-    * idempotence is spec-asserted like CdrStreamJob.writeBatch's). */
-  private[graft] def writeBatchPartition(out: DataFrame, batchId: Long,
-                                         partCols: Seq[String], path: String,
-                                         format: String): Unit =
-    out.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partCols :+ "batch_id": _*)
-      .format(format)
-      .save(path)
-
   /** Start the ingest: JSONL in `inDir` → curated lang-partitioned parquet
     * in `outDir` (kept docs only, canonical document columns) + raw
     * corrupt lines in `quarantineDir`.
@@ -306,11 +293,13 @@ object CorpusIngest {
           // shard-store composition exists to rule out (review-caught)
           if (shardDir.isDefined) kept.persist()
           try {
-            writeBatchPartition(kept, batchId, Seq("lang"), outDir, "parquet")
-            writeBatchPartition(
+            CdrStreamJob.writeBatch(kept, batchId, outDir,
+              maxRecordsPerFile = 0L, partCols = Seq("lang"))
+            CdrStreamJob.writeBatch(
               JsonlDocs.quarantine(batch).select(col("_corrupt_record").as("value")),
-              batchId, Nil, quarantineDir, "text")
-            shardDir.foreach(Maintenance.appendShards(
+              batchId, quarantineDir, maxRecordsPerFile = 0L, partCols = Nil,
+              format = "text")
+            shardDir.foreach(graft.llm.TrainingShards.appendSized(
               kept.select(col("doc_id"), col("text")), _, nShards = 0, batchId + 1L))
           } finally if (shardDir.isDefined) kept.unpersist()
           onBatchComplete(batchId)

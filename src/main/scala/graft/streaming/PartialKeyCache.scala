@@ -1,5 +1,12 @@
 package graft.streaming
 
+import java.util.concurrent.{ExecutionException, TimeUnit}
+import java.util.concurrent.atomic.AtomicLong
+
+import com.google.common.base.Ticker
+import com.google.common.cache.{Cache, CacheBuilder}
+import com.google.common.util.concurrent.{ExecutionError, UncheckedExecutionException}
+
 /** Per-key partial lookup cache — the reference's `'lookup.cache' =
   * 'PARTIAL'` semantics (EnrichmentApp.java:246-248, flink.conf:37-48).
   *
@@ -26,8 +33,11 @@ package graft.streaming
   * stays on the broadcast-snapshot path ([[DimensionCache]] + stream-static
   * join), which never issues per-key queries at all.
   *
-  * Thread-safe; `clock` is injectable so specs can drive expiry
-  * deterministically.
+  * Guava's cache, like the reference's: one segment (`concurrencyLevel(1)`)
+  * makes `maximumSize` eviction exact LRU; `expireAfterWrite` reads a
+  * `Ticker` on `clock`, injectable so specs drive expiry; per-key loading
+  * never blocks hits on other keys behind a slow fetch (a stalled DB
+  * round-trip), and concurrent misses on one key wait for one fetch.
   */
 final class PartialKeyCache[K, V](fetch: K => Seq[V],
                                   maxRows: Int,
@@ -36,71 +46,48 @@ final class PartialKeyCache[K, V](fetch: K => Seq[V],
                                   clock: () => Long = () => System.currentTimeMillis()) {
   require(maxRows > 0, s"max-rows must be positive, got $maxRows")
 
-  private case class Entry(rows: Seq[V], writtenAt: Long)
+  private val fetchCount = new AtomicLong()
 
-  // accessOrder = true ⇒ iteration order is least-recently-used first;
-  // removeEldestEntry fires on insert once the key budget is exceeded
-  private val map = new java.util.LinkedHashMap[K, Entry](16, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[K, Entry]): Boolean =
-      this.size() > maxRows // the map's size (explicit: Scala-3 legacy-binding)
-  }
-  private var fetchCount = 0L
+  // Guava caches every loaded value: with cacheMissingKey off, a missing
+  // key's load fails with this instead and get answers Nil
+  private object NotCached extends Exception with scala.util.control.NoStackTrace
 
-  // one in-flight load per key: concurrent misses on the same key wait for
-  // the single fetch instead of issuing duplicates
-  private val inflight =
-    new java.util.concurrent.ConcurrentHashMap[K, java.util.concurrent.CompletableFuture[Seq[V]]]()
+  // Tuple1 keys: Guava needs non-null reference keys, and a dim probe may
+  // carry a NULL key or a primitive one
+  private val cache: Cache[Tuple1[K], Seq[V]] = CacheBuilder.newBuilder()
+    .concurrencyLevel(1)
+    .maximumSize(maxRows.toLong)
+    .expireAfterWrite(ttlMs, TimeUnit.MILLISECONDS)
+    .ticker(new Ticker { def read(): Long = TimeUnit.MILLISECONDS.toNanos(clock()) })
+    .build[Tuple1[K], Seq[V]]()
 
-  /** The backing-store fetch runs OUTSIDE the cache monitor: a cold/slow
-    * key (a stalled DB round-trip can take seconds) must not serialize
-    * every other thread's cache hits behind it — the Guava cache the
-    * reference uses loads per-key without a global lock too. Concurrent
-    * misses on the SAME key are deduplicated through `inflight`. */
-  def get(key: K): Seq[V] = {
-    val cached = synchronized {
-      val now = clock()
-      val hit = map.get(key) // refreshes LRU recency when present
-      if (hit != null && now - hit.writtenAt < ttlMs) Some(hit.rows)
-      else {
-        if (hit != null) map.remove(key) // expired: drop before re-fetch
-        None
-      }
-    }
-    cached.getOrElse {
-      val f = new java.util.concurrent.CompletableFuture[Seq[V]]()
-      val prior = inflight.putIfAbsent(key, f)
-      if (prior != null) {
-        // someone else is loading this key; unwrap so every caller sees
-        // the SAME exception type the loading thread threw, not a
-        // CompletionException that dodges their catch clauses
-        try prior.join()
-        catch {
-          case e: java.util.concurrent.CompletionException =>
-            throw Option(e.getCause).getOrElse(e)
+  /** The cached rows for `key`, fetching them on a miss. A failed fetch
+    * caches nothing and throws the fetch's own exception, to the loading
+    * caller and to every caller that waited on it. */
+  def get(key: K): Seq[V] =
+    try cache.get(Tuple1(key), () => load(key))
+    catch {
+      case e @ (_: ExecutionException | _: UncheckedExecutionException | _: ExecutionError) =>
+        e.getCause match {
+          case NotCached => Nil
+          case cause => throw cause
         }
-      } else {
-        try {
-          val rows = fetch(key)
-          val now = clock()
-          synchronized {
-            fetchCount += 1
-            if (rows.nonEmpty || cacheMissingKey) map.put(key, Entry(rows, now))
-          }
-          f.complete(rows)
-          rows
-        } catch {
-          case t: Throwable => f.completeExceptionally(t); throw t
-        } finally inflight.remove(key)
-      }
     }
+
+  private def load(key: K): Seq[V] = {
+    val rows = fetch(key)
+    fetchCount.incrementAndGet()
+    if (rows.isEmpty && !cacheMissingKey) throw NotCached
+    rows
   }
 
   /** Number of backing-store fetches issued so far (spec instrumentation). */
-  def fetches: Long = synchronized(fetchCount)
+  def fetches: Long = fetchCount.get()
 
   /** Number of resident entries (spec instrumentation). */
-  def size: Int = synchronized(map.size())
+  def size: Int = cache.size().toInt
 
-  /** True iff the key is resident (does NOT refresh recency or check TTL). */
-  def contains(key: K): Boolean = synchronized(map.containsKey(key))
+  /** True iff the key is resident and unexpired (does NOT refresh
+    * recency). */
+  def contains(key: K): Boolean = cache.asMap().containsKey(Tuple1(key))
 }

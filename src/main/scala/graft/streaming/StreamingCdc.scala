@@ -14,7 +14,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * ('error') DELETES the key, and a later upsert resurrects it. Late rows
   * older than the current winner are ignored — which makes the operator
   * insensitive to arrival order ACROSS batches too (unlike
-  * [[StreamingEwma]], whose recursion is order-sensitive by nature): the
+  * `StreamingEwma`, a spec-side twin under `src/test`, whose recursion
+  * is order-sensitive by nature): the
   * argmax of a set is arrival-order-free, so this twin is exact under
   * arbitrary reordering. Output mode Update: one refreshed
   * (user_id, last_value, last_ts, deleted) row per touched key per batch —

@@ -18,7 +18,7 @@ class PlanAuditSpec extends SparkSpec {
     * - BroadcastExchange doesn't count: a dim broadcast is precisely what
     *   these tests want to see instead of a shuffle.
     * - RoundRobinPartitioning doesn't count: that is the
-    *   `Tables.ensureParallelism` input-conditioning rebalance (the fixture
+    *   `Tables.documents`/`Tables.embeddings` parallelism floor (the fixture
     *   is single-row-group parquet, so the scan is ONE task; the floor buys
     *   back the other cores). It carries no key, merges with no join/agg,
     *   and is a no-op at real scale where the scan is already parallel —

@@ -83,15 +83,15 @@ class StreamingSpec extends SparkSpec {
     val docs = Seq((1L, "a b", "en", "s1", 3L), (2L, "c d", "en", "s1", 3L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     val dead = Seq("{broken").toDF("value")
-    streaming.CorpusIngest.writeBatchPartition(docs, 3L, Seq("lang"), out, "parquet")
-    streaming.CorpusIngest.writeBatchPartition(dead, 3L, Nil, qd, "text")
+    CdrStreamJob.writeBatch(docs, 3L, out, 0L, Seq("lang"))
+    CdrStreamJob.writeBatch(dead, 3L, qd, 0L, Nil, "text")
     // failure between write and checkpoint commit ⇒ same batchId re-runs
-    streaming.CorpusIngest.writeBatchPartition(docs, 3L, Seq("lang"), out, "parquet")
-    streaming.CorpusIngest.writeBatchPartition(dead, 3L, Nil, qd, "text")
+    CdrStreamJob.writeBatch(docs, 3L, out, 0L, Seq("lang"))
+    CdrStreamJob.writeBatch(dead, 3L, qd, 0L, Nil, "text")
     assert(spark.read.parquet(out).count() == 2, "parquet replay must not duplicate")
     assert(spark.read.text(qd).count() == 1, "quarantine replay must not duplicate")
     // a genuinely new batch still lands alongside
-    streaming.CorpusIngest.writeBatchPartition(docs, 4L, Seq("lang"), out, "parquet")
+    CdrStreamJob.writeBatch(docs, 4L, out, 0L, Seq("lang"))
     assert(spark.read.parquet(out).count() == 4)
   }
 

@@ -217,31 +217,38 @@ class TrainingShardsSpec extends SparkSpec {
 
   test("part protocol: readOptional is None only for a missing or schema-less part; other analysis errors propagate") {
     val missing = tmpPart("missing")
-    // a missing part is found by a check, not by a failed read: a failed
-    // read is a failed query execution that every execution listener
-    // hears. The marker query after it is delivered after any failure the
-    // probe caused (one listener bus, in posting order).
-    val failedOnMissing = new java.util.concurrent.atomic.AtomicInteger(0)
+    // an existing directory with no data files
+    val bare = tmpPart("bare")
+    new java.io.File(bare).mkdirs()
+    // a zero-row build writes no partition dirs, only its _SUCCESS marker
+    val zero = tmpPart("zero")
+    ArtifactCompaction.writeBatch(spark.range(0).toDF("doc_id"), zero, 0L,
+      dynamic = false)
+    val probed = Seq(missing, bare, zero)
+    // none of them is found by a failed read: a failed read is a failed
+    // query execution that every execution listener hears. The marker
+    // query after them is delivered after any failure the probes caused
+    // (one listener bus, in posting order).
+    val failedProbes = new java.util.concurrent.atomic.AtomicInteger(0)
     val markerSeen = new java.util.concurrent.CountDownLatch(1)
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       def onSuccess(funcName: String,
                     qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
         if (qe.analyzed.schema.fieldNames.contains("read_optional_marker")) markerSeen.countDown()
       def onFailure(funcName: String,
-                    qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit =
-        if (String.valueOf(exception.getMessage).contains(missing)) failedOnMissing.incrementAndGet()
+                    qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = {
+        val msg = String.valueOf(exception.getMessage)
+        if (probed.exists(msg.contains) || msg.contains("UNABLE_TO_INFER_SCHEMA"))
+          failedProbes.incrementAndGet()
+      }
     }
     spark.listenerManager.register(listener)
     try {
-      assert(ArtifactCompaction.readOptional(spark, missing).isEmpty)
+      probed.foreach(p => assert(ArtifactCompaction.readOptional(spark, p).isEmpty, p))
       spark.range(1).toDF("read_optional_marker").collect()
       assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      assert(failedOnMissing.get() == 0, "readOptional issued a failing read of a missing part")
+      assert(failedProbes.get() == 0, "readOptional issued a failing read of a part with no data files")
     } finally spark.listenerManager.unregister(listener)
-    // an existing directory with no data files (UNABLE_TO_INFER_SCHEMA)
-    val bare = tmpPart("bare")
-    new java.io.File(bare).mkdirs()
-    assert(ArtifactCompaction.readOptional(spark, bare).isEmpty)
     val stored = tmpPart("stored")
     ArtifactCompaction.writeBatch(Seq(1L, 2L).toDF("doc_id"), stored, 3L,
       dynamic = false)

@@ -93,12 +93,12 @@ object Maintenance {
     * ([[graft.llm.TrainingShards.appendTrainingShards]]); shipped shards are
     * never rewritten, so a training job can consume the store while it
     * grows. `docs` carries (doc_id, text); `nShards <= 0` sizes each batch
-    * from its own payload ([[appendShards]]). The manifest is one
-    * coalesced file per batch and has no compaction. */
+    * from its own payload ([[graft.llm.TrainingShards.appendSized]]). The
+    * manifest is one coalesced file per batch and has no compaction. */
   def trainingShards(docs: DataFrame, dir: String, nShards: Int,
                      checkpoint: String, triggerMs: Long = 100L): StreamingQuery =
     maintain(docs, checkpoint, triggerMs, 1L, 0, Nil)((_, _) => ())(
-      persisted(appendShards(_, dir, nShards, _)))
+      persisted(TrainingShards.appendSized(_, dir, nShards, _)))
 
   /** Packed token-shard store: every batch folds in as new packs and
     * containers tokenized by the STORE's own tokenizer
@@ -118,25 +118,6 @@ object Maintenance {
         if (batch.agg(count(lit(1))).head().getLong(0) > 0L)
           TrainingShards.appendPackedTokenShards(batch, dir, nShards, id)
       })
-
-  /** Append `docs` to the training-shard store as batch `ingestBatch`,
-    * skipping an empty frame. One one-row stats aggregate is both the
-    * empty check and, when `nShards <= 0`, the increment's size for
-    * [[graft.llm.TrainingShards.shardCountFor]], so a small increment does
-    * not mint a fixed count of near-empty containers. The caller persists
-    * `docs`: the aggregate and the container write are two actions. */
-  private[streaming] def appendShards(docs: DataFrame, dir: String,
-                                      nShards: Int, ingestBatch: Long): Unit = {
-    val st =
-      if (nShards > 0) docs.agg(count(lit(1)), lit(0L)).head()
-      else docs.agg(count(lit(1)),
-        coalesce(sum(octet_length(col("text"))), lit(0L))).head()
-    if (st.getLong(0) > 0L)
-      TrainingShards.appendTrainingShards(docs, dir,
-        if (nShards > 0) nShards
-        else TrainingShards.shardCountFor(st.getLong(1), st.getLong(0)),
-        ingestBatch)
-  }
 
   /** The one maintainer loop: micro-batch `batchId` appends at partition
     * `batchId + offset`. At the top of each batch, with `every > 0`, two

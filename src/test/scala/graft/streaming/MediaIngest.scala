@@ -34,14 +34,14 @@ object MediaIngest {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val decoded = Multimodal.probeMediaSafe(batch).persist()
         try {
-          CorpusIngest.writeBatchPartition(
+          CdrStreamJob.writeBatch(
             decoded.filter(col("decode_ok"))
               .select("doc_id", "format", "n_bytes", "n_units"),
-            batchId, Seq("format"), outDir, "parquet")
-          CorpusIngest.writeBatchPartition(
+            batchId, outDir, maxRecordsPerFile = 0L, partCols = Seq("format"))
+          CdrStreamJob.writeBatch(
             decoded.filter(!col("decode_ok"))
               .select("doc_id", "format", "n_bytes"),
-            batchId, Nil, quarantineDir, "parquet")
+            batchId, quarantineDir, maxRecordsPerFile = 0L, partCols = Nil)
           onBatchComplete(batchId)
         } finally decoded.unpersist()
         ()

@@ -50,7 +50,7 @@ object StreamingBpe {
             .split(" ").filter(_.nonEmpty)
           var toks = 0L
           words.foreach { w =>
-            toks += memo.getOrElseUpdate(w, BpeTrainer.replayWord(ms, w))
+            toks += memo.getOrElseUpdate(w, BpeTrainer.replayWordSyms(ms, w).length)
           }
           Row(r.getLong(0), toks, words.length.toLong)
         }

@@ -24,7 +24,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * Assumes documents arrive whole (a micro-batch never splits one doc's
   * tokens) and are never re-sent — the append-only corpus contract; a
   * replayed BATCH is safe when the downstream write is the idempotent
-  * batch_id-overwrite sink ([[CorpusIngest.writeBatchPartition]]).
+  * batch_id-overwrite sink ([[CdrStreamJob.writeBatch]]).
   */
 object StreamingPostings {
 

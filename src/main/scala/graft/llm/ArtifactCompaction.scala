@@ -159,7 +159,7 @@ object ArtifactCompaction {
     val fs = base.getFileSystem(hconf)
     val tmp = new Path(base, "_tmp-compact")
     val plan = new Path(base, "_compact-plan")
-    recover(fs, base, tmp, plan)
+    recoverPart(spark, partPath)
     val old = batchIds(fs, base).filter(_ <= upTo)
     if (old.length <= 1) return 0
     // snap: the merged partition always reuses a REAL existing batch id
@@ -215,27 +215,20 @@ object ArtifactCompaction {
     try new String(in.readAllBytes(), "UTF-8").trim.toLong finally in.close()
   }
 
-  /** Recovery alone, as an entry point: roll a crashed compaction of one
-    * part forward or back WITHOUT starting a new rewrite. The streaming
-    * maintainers run this on every micro-batch (two exists() probes when
-    * clean) — recovery must not wait for the next thresholded compaction,
-    * because a mid-swap crash leaves rows that exist ONLY in the
-    * `_tmp-compact` copy (their partitions already deleted), and every
+  /** Roll a crashed compaction of one part forward or back WITHOUT
+    * starting a new rewrite — called at the top of every [[compactPart]],
+    * so the operation is restartable from any crash point. Streaming
+    * maintainers also run it on every micro-batch (two exists() probes
+    * when clean): recovery must not wait for the next thresholded
+    * compaction, because a mid-swap crash leaves rows that exist ONLY in
+    * the `_tmp-compact` copy (their partitions already deleted), and every
     * read between the crash and the roll-forward would silently miss
     * them. A no-op when the part dir doesn't exist yet. */
   private[graft] def recoverPart(spark: SparkSession, partPath: String): Unit = {
     val base = new Path(partPath)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(base))
-      recover(fs, base, new Path(base, "_tmp-compact"),
-        new Path(base, "_compact-plan"))
-  }
-
-  /** Roll a crashed compaction forward or back — called at the top of
-    * every [[compactPart]], so the operation is restartable from any
-    * crash point. */
-  private def recover(fs: FileSystem, base: Path,
-                      tmp: Path, plan: Path): Unit = {
+    if (!fs.exists(base)) return
+    val (tmp, plan) = (new Path(base, "_tmp-compact"), new Path(base, "_compact-plan"))
     // a crashed writePlan leaves only the staging name — scrap, never read
     val staging = plan.suffix(".staging")
     if (fs.exists(staging)) require(fs.delete(staging, false),

@@ -105,9 +105,9 @@ object Dedup {
   }
 
   /** The bounded-collect vocabulary behind every exact-encoding consumer
-    * ([[shingleIds]], [[winnowFingerprints]]) — `Some((token → tid table,
-    * vBase))` or `None` past `bound`, where the caller must run its hashed
-    * twin instead.
+    * ([[shingleIds]], [[winnowFingerprints]], [[simhash]]) — `Some((token →
+    * tid table, vBase))` or `None` past `bound`, where the caller must run
+    * its hashed twin instead.
     *
     * The exact path's vocabulary is ≤ bound (~2.1M) rows BY THE BRANCH
     * GUARD, i.e. bounded driver state by construction — the LSH-plane
@@ -613,22 +613,19 @@ object Dedup {
     * branch has executed evidence. */
   def simhash(docs: DataFrame, exactVocabBound: Long): DataFrame = {
     val tok = tokenized(docs)
-    // same switch point as shingleIds, decided the same cheap way
-    // (approx distinct + exact recheck — see [[vocabOverBound]]): past
-    // ~2M distinct tokens the vocab table stops being "tiny" and the
-    // broadcast + per-query corpus-wide distinct stop being acceptable —
-    // derive the pseudo-bits from xxhash64(token) instead (no vocab at
-    // all). Below it, keep the vocabulary-id arithmetic the DuckDB oracle
-    // reproduces bit-for-bit.
-    if (vocabOverBound(tok, exactVocabBound)) return simhashHashed(docs)
-    val v = vocab(tok)
-    if (v.count() + 1 > exactVocabBound) simhashHashed(docs)
-    else {
-      val dt = tok.select(col("doc_id"), explode(array_distinct(col("words"))).as("token"))
-        .join(broadcast(v), "token")
-      packSimhashBits(dt, j =>
-        expr(s"CASE WHEN ((tid % 3037000493) * 2654435761 + $j * 40503) % 65536 >= 32768" +
-          s" THEN 1 ELSE -1 END"))
+    // the same switch as shingleIds ([[boundedVocab]]): past ~2M distinct
+    // tokens the vocab table stops being "tiny" and the broadcast stops
+    // being acceptable — derive the pseudo-bits from xxhash64(token)
+    // instead (no vocab at all). Below it, keep the vocabulary-id
+    // arithmetic the DuckDB oracle reproduces bit-for-bit.
+    boundedVocab(tok, exactVocabBound) match {
+      case None => simhashHashed(docs)
+      case Some((v, _)) =>
+        val dt = tok.select(col("doc_id"), explode(array_distinct(col("words"))).as("token"))
+          .join(broadcast(v), "token")
+        packSimhashBits(dt, j =>
+          expr(s"CASE WHEN ((tid % 3037000493) * 2654435761 + $j * 40503) % 65536 >= 32768" +
+            s" THEN 1 ELSE -1 END"))
     }
   }
 

@@ -1,7 +1,7 @@
 package graft.llm
 
 import graft.{Tables, Util}
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -119,35 +119,18 @@ object Multimodal {
     }(enc)
   }
 
-  val decodedSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("format", StringType),
-    StructField("n_bytes", IntegerType),
-    StructField("width", IntegerType),
-    StructField("height", IntegerType),
-    StructField("channels", IntegerType)))
-
-  /** Partition-wise batched REAL decode: `ImageIO.read` per payload, one
-    * reusable input-stream path per partition — width/height from the
-    * decoded image, channels from the raster's band count. Swap in a GPU
-    * codec at this seam and nothing upstream or downstream changes. */
-  def decodeBatch(media: DataFrame): DataFrame = {
-    val enc = RowEncoder.encoderFor(decodedSchema)
-    val out: Dataset[Row] = media
-      .select(col("doc_id"), col("payload"), col("format"))
-      .mapPartitions { rows =>
-        rows.map { r =>
-          // positional getters: rows arriving across a prior mapPartitions
-          // boundary are schema-less GenericRows (name lookup throws)
-          val payload = r.getAs[Array[Byte]](1)
-          val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))
-          require(img != null, s"undecodable image payload for doc ${r.getLong(0)}")
-          Row(r.getLong(0), r.getString(2), payload.length,
-            img.getWidth, img.getHeight, img.getRaster.getNumBands)
-        }
-      }(enc)
-    out
-  }
+  /** Partition-wise batched REAL decode: [[decodeBatchSafe]] plus the
+    * strict check — a payload the codec rejects fails the task with
+    * "undecodable image payload for doc N". The check is a FILTER, so a
+    * consumer that projects only the geometry (or just counts) cannot
+    * prune it away. Swap in a GPU codec at the shared seam and nothing
+    * upstream or downstream changes. */
+  def decodeBatch(media: DataFrame): DataFrame =
+    decodeBatchSafe(media)
+      .filter(col("decode_ok") || raise_error(concat(
+        lit("undecodable image payload for doc "), col("doc_id").cast("string")))
+        .cast(BooleanType))
+      .drop("decode_ok")
 
   // ------------------------------------------------- real audio codec
 
@@ -189,23 +172,24 @@ object Multimodal {
     StructField("channels", IntegerType),
     StructField("decode_ok", BooleanType)))
 
-  /** Poison-tolerant twin of [[decodeBatch]]: a payload the codec rejects
-    * (truncated file, wrong magic, codec exception) becomes a row with
-    * `decode_ok = false` and null geometry instead of an exception. At
-    * 100 TB a corrupt payload is ROUTINE — the strict form's `require`
-    * would kill the whole job for one bad object, so production pipelines
-    * route failures to a quarantine (see `graft.streaming.MediaIngest`, a
-    * spec-side sink under `src/test`) and keep going; the strict form
-    * stays the fixture-oracle assertion that OUR generated payloads all
-    * decode. */
+  /** The one image decode: `ImageIO.read` per payload inside a
+    * partition-wise `mapPartitions` stage — width/height from the decoded
+    * image, channels from the raster's band count. A payload the codec
+    * rejects (truncated file, wrong magic, codec exception, NULL) becomes a
+    * row with `decode_ok = false` and null geometry instead of an
+    * exception. At 100 TB a corrupt payload is ROUTINE — one bad object
+    * must not kill the job, so production pipelines route failures to a
+    * quarantine (see `graft.streaming.MediaIngest`, a spec-side sink under
+    * `src/test`) and keep going; [[decodeBatch]] is this decode plus the
+    * fixture-oracle assertion that OUR generated payloads all decode. */
   def decodeBatchSafe(media: DataFrame): DataFrame = {
     val enc = RowEncoder.encoderFor(safeDecodedSchema)
     media.select(col("doc_id"), col("payload"), col("format"))
       .mapPartitions { rows =>
         rows.map { r =>
-          // a NULL payload is a reject row like any other corrupt object —
-          // dereferencing it outside the guard would kill the very job the
-          // safe decode exists to keep alive (review-caught)
+          // positional getters: rows arriving across a prior mapPartitions
+          // boundary are schema-less GenericRows (name lookup throws). A
+          // NULL payload is a reject row like any other corrupt object.
           val payload = r.getAs[Array[Byte]](1)
           val img =
             if (payload == null) null

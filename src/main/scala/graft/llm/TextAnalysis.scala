@@ -909,16 +909,23 @@ object TextAnalysis {
     * text-keyed). Eval docs themselves (doc_id ≡ 0 mod 101) are the
     * benchmark, not trainable — excluded from the report. */
   def curate(docs: DataFrame, qualityThreshold: Double = 0.45,
-             evalMod: Long = 101L): DataFrame = {
-    val base = docs.filter(col("doc_id") % evalMod =!= 0)
-    val sig = signals(base)
+             evalMod: Long = 101L): DataFrame =
+    curateWith(docs, qualityThreshold, evalMod)(
+      _.withColumn("is_keeper", col("doc_id") ===
+        min(col("doc_id")).over(Window.partitionBy(xxhash64(col("text"))))))
+
+  /** The body [[curate]] and [[curateNearDupFromClusters]] share: eval
+    * holdout, the per-row signals and gates, the broadcast contamination
+    * left-join, then `keeper` (which adds `is_keeper` — the only step the
+    * two differ in), the `keep` conjunction and the report columns. */
+  private def curateWith(docs: DataFrame, qualityThreshold: Double, evalMod: Long)(
+      keeper: DataFrame => DataFrame): DataFrame = {
+    val sig = signals(docs.filter(col("doc_id") % evalMod =!= 0))
     val contaminated = decontaminate(docs, evalMod).filter(col("is_contaminated"))
       .select(col("doc_id"), lit(true).as("contam"))
-    val keeperWin = Window.partitionBy(xxhash64(col("text")))
-    withGateColumns(sig.join(broadcast(contaminated), Seq("doc_id"), "left_outer"),
+    keeper(withGateColumns(sig.join(broadcast(contaminated), Seq("doc_id"), "left_outer"),
         qualityThreshold)
-      .withColumn("not_contaminated", coalesce(!col("contam"), lit(true)))
-      .withColumn("is_keeper", col("doc_id") === min(col("doc_id")).over(keeperWin))
+      .withColumn("not_contaminated", coalesce(!col("contam"), lit(true))))
       .withColumn("keep", col("lang_ok") && col("quality_ok") && col("not_repetitive") &&
         col("not_contaminated") && col("is_keeper"))
       .select(col("doc_id"), col("lang_ok"), col("quality_ok"), col("not_repetitive"),
@@ -947,10 +954,6 @@ object TextAnalysis {
   def curateNearDupFromClusters(docs: DataFrame, clusters: DataFrame,
                                 qualityThreshold: Double = 0.45,
                                 evalMod: Long = 101L): DataFrame = {
-    val base = docs.filter(col("doc_id") % evalMod =!= 0)
-    val sig = signals(base)
-    val contaminated = decontaminate(docs, evalMod).filter(col("is_contaminated"))
-      .select(col("doc_id"), lit(true).as("contam"))
     // LEFT join + singleton coalesce, never an inner join on the label
     // table: a stored artifact is a snapshot, so documents ingested after
     // its build have no label row — an inner join would silently ERASE
@@ -964,16 +967,9 @@ object TextAnalysis {
       .withColumn("cluster", coalesce(col("cluster"), col("doc_id")))
     val keepers = labels
       .groupBy(col("cluster")).agg(min(col("doc_id")).as("nd_keeper"))
-    withGateColumns(sig.join(broadcast(contaminated), Seq("doc_id"), "left_outer"),
-        qualityThreshold)
-      .withColumn("not_contaminated", coalesce(!col("contam"), lit(true)))
-      .join(labels, "doc_id")
-      .join(keepers, "cluster")
-      .withColumn("is_keeper", col("doc_id") === col("nd_keeper"))
-      .withColumn("keep", col("lang_ok") && col("quality_ok") && col("not_repetitive") &&
-        col("not_contaminated") && col("is_keeper"))
-      .select(col("doc_id"), col("lang_ok"), col("quality_ok"), col("not_repetitive"),
-        col("not_contaminated"), col("is_keeper"), col("keep"))
+    curateWith(docs, qualityThreshold, evalMod)(
+      _.join(labels, "doc_id").join(keepers, "cluster")
+        .withColumn("is_keeper", col("doc_id") === col("nd_keeper")))
   }
 
   /** Curation-funnel attribution: the per-stage removal waterfall of the

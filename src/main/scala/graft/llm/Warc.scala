@@ -310,95 +310,66 @@ object WarcIngest {
     recs.filter(_.warcType == "response").map { rec =>
       val id = rec.recordId.stripPrefix("<urn:graft:doc-")
         .stripSuffix(">").toLong
-      Row(source, shard, id, rec.targetUri, rec.payload.length.toLong)
+      Row(source, shard, id, rec.targetUri, rec.payload.length.toLong, true, null)
     }
 
-  /** Parse containers to the response-record stream; the doc id is read
-    * BACK out of the WARC-Record-ID urn — row-level parse parity, not an
-    * echo of carried columns. */
-  def records(containers: DataFrame): DataFrame = {
-    val enc = RowEncoder.encoderFor(recordSchema)
+  /** The one record walk behind every reader: containers → response rows
+    * with `ok`/`err`. Each member is parsed as its own WARC container — a
+    * `.warc.gz` container walks its gzip members lazily
+    * ([[GzipMembers.memberIterator]]), a plain one is a single member. At
+    * the first poison (bad gzip member OR bad WARC framing) the walk yields
+    * ONE quarantine row (`ok = false`, the error text) and stops; the good
+    * rows of the members before it are kept — exactly how far a ranged
+    * reader would have gotten (at 100 TB each executor inflates only the
+    * members inside its byte range; the member walk IS the split
+    * algorithm). A plain container is one member, so its poison leaves
+    * one quarantine row and no good rows. The doc id is read BACK out of
+    * the WARC-Record-ID urn — row-level parse parity, not an echo of
+    * carried columns. */
+  private def walk(containers: DataFrame, gz: Boolean): DataFrame = {
+    val enc = RowEncoder.encoderFor(
+      recordSchema.add("ok", BooleanType).add("err", StringType))
     containers.select(col("source"), col("shard"), col("payload"))
       .mapPartitions { rows =>
         rows.flatMap { r =>
-          responseRows(r.getString(0), r.getLong(1),
-            WarcCodec.parse(r.getAs[Array[Byte]](2)))
+          val (source, shard, bytes) = (r.getString(0), r.getLong(1), r.getAs[Array[Byte]](2))
+          val members =
+            if (gz) GzipMembers.memberIterator(bytes).map(_._2) else Iterator.single(bytes)
+          Iterator.unfold(false) { poisoned =>
+            if (poisoned || !members.hasNext) None
+            else try Some((responseRows(source, shard, WarcCodec.parse(members.next())), false))
+            catch {
+              case e: IllegalArgumentException =>
+                Some((Seq(Row(source, shard, null, null, null, false, e.getMessage)), true))
+            }
+          }.flatten
         }
       }(enc)
   }
 
-  /** [[records]] over `.warc.gz` containers: walk the gzip members, inflate
-    * each, parse each member as its own one-record WARC container — the
-    * exact shape a ranged Common Crawl reader has (at 100 TB each executor
-    * inflates only the members inside its byte range; the member walk IS
-    * the split algorithm). */
-  def recordsGz(containers: DataFrame): DataFrame = {
-    val enc = RowEncoder.encoderFor(recordSchema)
-    containers.select(col("source"), col("shard"), col("payload"))
-      .mapPartitions { rows =>
-        rows.flatMap { r =>
-          responseRows(r.getString(0), r.getLong(1),
-            GzipMembers.members(r.getAs[Array[Byte]](2))
-              .flatMap { case (_, m) => WarcCodec.parse(m) })
-        }
-      }(enc)
-  }
+  /** The strict contract over [[walk]]: a quarantine row fails the task
+    * with the poison's message. The check is a FILTER, so a consumer that
+    * reads none of `ok`/`err` (a per-source count) cannot prune it away. */
+  private def strict(recs: DataFrame): DataFrame =
+    recs.filter(col("ok") || raise_error(col("err")).cast(BooleanType)).drop("ok", "err")
+
+  /** Parse containers to the response-record stream; a malformed
+    * container fails the task. */
+  def records(containers: DataFrame): DataFrame = strict(walk(containers, gz = false))
+
+  /** [[records]] over `.warc.gz` containers: each record is its own gzip
+    * member, inflated and parsed alone. */
+  def recordsGz(containers: DataFrame): DataFrame = strict(walk(containers, gz = true))
 
   /** Poison-gated twin of [[records]]: a malformed container becomes ONE
     * quarantine row (`ok = false`, the error text) instead of a job-killing
     * exception; good containers flow through unchanged. */
-  def recordsSafe(containers: DataFrame): DataFrame = {
-    val schema = recordSchema.add("ok", BooleanType).add("err", StringType)
-    val enc = RowEncoder.encoderFor(schema)
-    containers.select(col("source"), col("shard"), col("payload"))
-      .mapPartitions { rows =>
-        rows.flatMap { r =>
-          try WarcCodec.parse(r.getAs[Array[Byte]](2))
-            .filter(_.warcType == "response")
-            .map { rec =>
-              val id = rec.recordId.stripPrefix("<urn:graft:doc-")
-                .stripSuffix(">").toLong
-              Row(r.getString(0), r.getLong(1), id, rec.targetUri,
-                rec.payload.length.toLong, true, null)
-            }
-          catch {
-            case e: IllegalArgumentException =>
-              Seq(Row(r.getString(0), r.getLong(1), null, null, null, false,
-                e.getMessage))
-          }
-        }
-      }(enc)
-  }
+  def recordsSafe(containers: DataFrame): DataFrame = walk(containers, gz = false)
 
   /** Poison-gated twin of [[recordsGz]]: a malformed container (bad gzip
     * member OR bad WARC framing inside a member) becomes ONE quarantine
-    * row. Members BEFORE the poison are kept — the member walk is exactly
-    * how far a real ranged reader would have gotten. */
-  def recordsGzSafe(containers: DataFrame): DataFrame = {
-    val schema = recordSchema.add("ok", BooleanType).add("err", StringType)
-    val enc = RowEncoder.encoderFor(schema)
-    containers.select(col("source"), col("shard"), col("payload"))
-      .mapPartitions { rows =>
-        rows.flatMap { r =>
-          val (source, shard) = (r.getString(0), r.getLong(1))
-          val good = Seq.newBuilder[Row]
-          try {
-            // lazy walk: every member BEFORE a poison one is yielded (and
-            // kept) before the throw — ranged-reader failure semantics
-            GzipMembers.memberIterator(r.getAs[Array[Byte]](2)).foreach {
-              case (_, m) => responseRows(source, shard, WarcCodec.parse(m))
-                .foreach(x => good += Row(x.get(0), x.get(1), x.get(2),
-                  x.get(3), x.get(4), true, null))
-            }
-            good.result()
-          } catch {
-            case e: IllegalArgumentException =>
-              good.result() :+ Row(source, shard, null, null, null, false,
-                e.getMessage)
-          }
-        }
-      }(enc)
-  }
+    * row. Members BEFORE the poison are kept. */
+  def recordsGzSafe(containers: DataFrame): DataFrame = walk(containers, gz = true)
 
   private def report(recs: DataFrame): DataFrame =
     recs.groupBy(col("source"))

@@ -83,6 +83,22 @@ object JdbcDim {
       } finally conn.close()
   }
 
+  /** One dimension's endpoint, keyed like the reference flink.conf block
+    * per dimension — `<dim>.url/.dbtable/.user/.password` and the HOCON
+    * duration `<dim>.lookup.partial-cache.expire-after-write` ("60s") —
+    * with engine-global `jdbc.*` fallbacks for fresh deployments. */
+  private final case class Endpoint(url: String, table: String, user: String,
+                                    password: String, ttlMs: Long)
+
+  private def endpoint(conf: GraftConfig, dim: String): Endpoint =
+    Endpoint(
+      conf.get(s"$dim.url",
+        conf.get("jdbc.url", "jdbc:postgresql://localhost:5432/postgres")),
+      conf.get(s"$dim.dbtable", dim),
+      conf.get(s"$dim.user", conf.get("jdbc.username", "postgres")),
+      conf.get(s"$dim.password", conf.get("jdbc.password", "")),
+      conf.getDurationMs(s"$dim.lookup.partial-cache.expire-after-write", 60000L))
+
   /** Per-key PARTIAL lookup cache for a dimension, wired from the same
     * flink.conf keys the reference uses (`lookup.partial-cache.max-rows`,
     * `lookup.partial-cache.expire-after-write` — flink.conf:37-48,
@@ -90,31 +106,18 @@ object JdbcDim {
     * batch enrichment stays on the broadcast snapshot ([[imsiMsisdn]] etc.). */
   def partialCache(conf: GraftConfig, dim: String, keyCol: String,
                    clock: () => Long = () => System.currentTimeMillis())
-      : PartialKeyCache[Any, Map[String, Any]] =
-    new PartialKeyCache(
-      pointFetcher(
-        conf.get(s"$dim.url",
-          conf.get("jdbc.url", "jdbc:postgresql://localhost:5432/postgres")),
-        conf.get(s"$dim.dbtable", dim),
-        keyCol,
-        conf.get(s"$dim.user", conf.get("jdbc.username", "postgres")),
-        conf.get(s"$dim.password", conf.get("jdbc.password", ""))),
+      : PartialKeyCache[Any, Map[String, Any]] = {
+    val e = endpoint(conf, dim)
+    new PartialKeyCache(pointFetcher(e.url, e.table, keyCol, e.user, e.password),
       maxRows = conf.getInt(s"$dim.lookup.partial-cache.max-rows", 100),
-      ttlMs = conf.getDurationMs(s"$dim.lookup.partial-cache.expire-after-write", 60000L),
-      clock = clock)
+      ttlMs = e.ttlMs, clock = clock)
+  }
 
-  /** Keys mirror the reference flink.conf block per dimension —
-    * `<dim>.url/.dbtable/.user/.password` and the HOCON duration
-    * `<dim>.lookup.partial-cache.expire-after-write` ("60s") — with
-    * engine-global `jdbc.*` fallbacks for fresh deployments. */
+  /** The dimension's full-table snapshot behind a TTL cache ([[endpoint]]
+    * keys). */
   private def cached(spark: SparkSession, conf: GraftConfig,
-                     dim: String): DimensionCache =
-    new DimensionCache(
-      () => read(spark,
-        conf.get(s"$dim.url",
-          conf.get("jdbc.url", "jdbc:postgresql://localhost:5432/postgres")),
-        conf.get(s"$dim.dbtable", dim),
-        conf.get(s"$dim.user", conf.get("jdbc.username", "postgres")),
-        conf.get(s"$dim.password", conf.get("jdbc.password", ""))),
-      conf.getDurationMs(s"$dim.lookup.partial-cache.expire-after-write", 60000L))
+                     dim: String): DimensionCache = {
+    val e = endpoint(conf, dim)
+    new DimensionCache(() => read(spark, e.url, e.table, e.user, e.password), e.ttlMs)
+  }
 }

@@ -127,79 +127,40 @@ object CorpusIngest {
       .partitionBy(xxhash64(col("text"))).orderBy(col("doc_id").asc_nulls_last)
     val gated = graft.llm.TextAnalysis.withGateColumns(
         graft.llm.TextAnalysis.signals(trainable), qualityThreshold)
-    val withContam = evalShingles match {
-      case Some(ev) =>
-        // row-unique-enough surrogate: shingle + overlap-count the DISTINCT
-        // texts keyed by their content hash (shingles are per-doc distinct
-        // in-row, so the count is distinct overlapping shingles), then flag
-        // every row carrying that text. Null-safe (a NULL doc_id doc still
-        // has a text hash) and pool-safe (duplicate doc_ids with different
-        // texts get independent counts).
-        val contaminated = graft.llm.Dedup
-          .shingles(graft.llm.Dedup.tokenized(
-            trainable.select(xxhash64(col("text")).as("doc_id"), col("text"))
-              .distinct()))
-          .join(broadcast(ev.select(col("shingle")).distinct()), "shingle")
-          .groupBy("doc_id").agg(count(lit(1)).as("n_overlap"))
-          .filter(col("n_overlap") >= minOverlap)
-          .select(col("doc_id").as("_chash"), lit(true).as("contam"))
-        gated.withColumn("_chash", xxhash64(col("text")))
-          .join(broadcast(contaminated), Seq("_chash"), "left_outer")
-          .withColumn("not_contaminated", coalesce(!col("contam"), lit(true)))
-      case None => gated.withColumn("not_contaminated", lit(true))
+    // each gate's scorer gets the batch's distinct (content hash AS doc_id,
+    // text) rows and returns the hashes that fail it, each once. Keyed on
+    // the text hash, never doc_id: a NULL doc_id would never join back
+    // (marking a failing doc trainable) and duplicate doc_ids with
+    // different texts would pool their scores.
+    val contamination = evalShingles.map { ev => (texts: DataFrame) =>
+      // shingles are per-doc distinct in-row, so the count is distinct
+      // overlapping shingles per text
+      graft.llm.Dedup.shingles(graft.llm.Dedup.tokenized(texts))
+        .join(broadcast(ev.select(col("shingle")).distinct()), "shingle")
+        .groupBy("doc_id").agg(count(lit(1)).as("n_overlap"))
+        .filter(col("n_overlap") >= minOverlap)
+        .select(col("doc_id"))
     }
-    val withNearDup = nearDupIndex match {
-      case Some(path) =>
-        val flagged = graft.llm.Dedup.incrementalAgainstIndex(
-            withContam.select(xxhash64(col("text")).as("doc_id"), col("text"))
-              .distinct(),
-            path, nearDupThreshold)
-          .select(col("new_doc").as("_nhash"), lit(true).as("neardup"))
-        withContam.withColumn("_nhash", xxhash64(col("text")))
-          .join(broadcast(flagged), Seq("_nhash"), "left_outer")
-          .withColumn("not_near_dup", coalesce(!col("neardup"), lit(true)))
-      case None => withContam.withColumn("not_near_dup", lit(true))
+    val nearDup = nearDupIndex.map { path => (texts: DataFrame) =>
+      graft.llm.Dedup.incrementalAgainstIndex(texts, path, nearDupThreshold)
+        .select(col("new_doc"))
     }
-    val withContained = (nearDupIndex, containmentThreshold) match {
-      case (Some(path), Some(tau)) =>
-        val flagged = graft.llm.Dedup.containmentAgainstIndex(
-            withNearDup.select(xxhash64(col("text")).as("doc_id"), col("text"))
-              .distinct(),
-            path, tau)
+    val contained = for (path <- nearDupIndex; tau <- containmentThreshold)
+      yield (texts: DataFrame) =>
+        graft.llm.Dedup.containmentAgainstIndex(texts, path, tau)
           .select(col("new_doc")).distinct()
-          .select(col("new_doc").as("_cohash"), lit(true).as("contained"))
-        withNearDup.withColumn("_cohash", xxhash64(col("text")))
-          .join(broadcast(flagged), Seq("_cohash"), "left_outer")
-          .withColumn("not_contained", coalesce(!col("contained"), lit(true)))
-      case _ => withNearDup.withColumn("not_contained", lit(true))
+    val lowImportance = dsirRatios.map { path => (texts: DataFrame) =>
+      graft.llm.TextAnalysis.dsirScoreAgainstRatios(texts, path)
+        .filter(col("imp_micro") < dsirMinScoreMicro).select(col("doc_id"))
     }
-    val withDsir = dsirRatios match {
-      case Some(path) =>
-        val lowScore = graft.llm.TextAnalysis.dsirScoreAgainstRatios(
-            withContained.select(xxhash64(col("text")).as("doc_id"), col("text"))
-              .distinct(),
-            path)
-          .filter(col("imp_micro") < dsirMinScoreMicro)
-          .select(col("doc_id").as("_dhash"), lit(true).as("low_imp"))
-        withContained.withColumn("_dhash", xxhash64(col("text")))
-          .join(broadcast(lowScore), Seq("_dhash"), "left_outer")
-          .withColumn("target_like", coalesce(!col("low_imp"), lit(true)))
-      case None => withContained.withColumn("target_like", lit(true))
+    val lowClassifier = nbWeights.map { path => (texts: DataFrame) =>
+      graft.llm.TextAnalysis.nbScoreAgainstWeights(texts, path)
+        .filter(col("nb_micro") < nbThresholdMicro).select(col("doc_id"))
     }
-    val withNb = nbWeights match {
-      case Some(path) =>
-        val lowScore = graft.llm.TextAnalysis.nbScoreAgainstWeights(
-            withDsir.select(xxhash64(col("text")).as("doc_id"), col("text"))
-              .distinct(),
-            path)
-          .filter(col("nb_micro") < nbThresholdMicro)
-          .select(col("doc_id").as("_nbhash"), lit(true).as("low_nb"))
-        withDsir.withColumn("_nbhash", xxhash64(col("text")))
-          .join(broadcast(lowScore), Seq("_nbhash"), "left_outer")
-          .withColumn("classifier_ok", coalesce(!col("low_nb"), lit(true)))
-      case None => withDsir.withColumn("classifier_ok", lit(true))
-    }
-    withNb
+    Seq("not_contaminated" -> contamination, "not_near_dup" -> nearDup,
+        "not_contained" -> contained, "target_like" -> lowImportance,
+        "classifier_ok" -> lowClassifier)
+      .foldLeft(gated) { case (df, (flag, failing)) => hashFlag(df, flag, failing) }
       .withColumn("is_keeper", row_number().over(keeperWin) === 1)
       .withColumn("keep", col("lang_ok") && col("quality_ok") &&
         col("not_repetitive") && col("not_contaminated") &&
@@ -211,6 +172,25 @@ object CorpusIngest {
         col("not_near_dup"), col("not_contained"), col("target_like"),
         col("classifier_ok"), col("is_keeper"), col("keep"))
   }
+
+  /** The content-hash flag join every corpus gate shares: `failing` gets
+    * the distinct `(xxhash64(text) AS doc_id, text)` rows of `df` and
+    * returns the hashes that fail the gate (one column, each hash once);
+    * every row whose text carries one of them gets `flag = false`, the
+    * rest `true`. The failing set is per-batch-distinct-text sized, so it
+    * is broadcast. No scorer: the gate is off and every row passes. */
+  private def hashFlag(df: DataFrame, flag: String,
+                       failing: Option[DataFrame => DataFrame]): DataFrame =
+    failing match {
+      case Some(score) =>
+        val hits = score(df.select(xxhash64(col("text")).as("doc_id"), col("text")).distinct())
+          .toDF("_hash").withColumn("_hit", lit(true))
+        df.withColumn("_hash", xxhash64(col("text")))
+          .join(broadcast(hits), Seq("_hash"), "left_outer")
+          .withColumn(flag, coalesce(!col("_hit"), lit(true)))
+          .drop("_hash", "_hit")
+      case None => df.withColumn(flag, lit(true))
+    }
 
   /** Cross-parameter invariants shared by [[gate]] and [[run]]. Validated at
     * [[run]] setup too (not just inside the per-batch [[gate]] call) so a

@@ -56,7 +56,6 @@ class OperatorsSpec extends SparkSpec {
         | AND a.event_id <> b.event_id""".stripMargin
     val naive = spark.sql(sql).as[(Long, Long)].collect().toSet
 
-    spark.experimental.extraOptimizations = Seq(plans.BandedIntervalJoinRule)
     // this 6-row relation is below the default small-side guard — zero the
     // threshold so the rewrite path itself is what's under test
     spark.conf.set("spark.graft.bandedIntervalJoin.smallSideThreshold", "0")
@@ -76,7 +75,6 @@ class OperatorsSpec extends SparkSpec {
         rewritten.queryExecution.optimizedPlan.toString.split("__graft_bin_l#").length)
     } finally {
       spark.conf.unset("spark.graft.bandedIntervalJoin.smallSideThreshold")
-      spark.experimental.extraOptimizations = Nil
     }
   }
 
@@ -88,7 +86,6 @@ class OperatorsSpec extends SparkSpec {
       """SELECT a.event_id AS id_a, b.event_id AS id_b
         |FROM opspec_tiny a JOIN opspec_tiny b
         |  ON b.ts >= a.ts AND b.ts <= a.ts + INTERVAL 300 SECOND""".stripMargin
-    spark.experimental.extraOptimizations = Seq(plans.BandedIntervalJoinRule)
     try {
       // default 64 KB small-side guard: a 2-row relation must NOT pay the
       // 2× explode — the nested loop is noise at this size
@@ -120,7 +117,6 @@ class OperatorsSpec extends SparkSpec {
     } finally {
       spark.conf.unset("spark.graft.bandedIntervalJoin.smallSideThreshold")
       spark.conf.unset("spark.graft.bandedIntervalJoin.enabled")
-      spark.experimental.extraOptimizations = Nil
     }
   }
 

@@ -428,6 +428,17 @@ class Round8OpsSpec extends SparkSpec {
         assert(r.getInt(r.fieldIndex("height")) == Multimodal.imageHeight(d))
       }
     }
+    // the strict decode is the same decode plus a check: a corrupt payload
+    // fails the task with its message, even through the mm_decode_real
+    // projection, which reads none of the check's columns
+    val strictErr = intercept[Exception](Multimodal.decodeBatch(media)
+      .select("doc_id", "format", "width", "height", "channels").collect())
+    val undecodable = "undecodable image payload for doc (\\d+)".r.unanchored
+    assert(Iterator.iterate[Throwable](strictErr)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage) match {
+        case undecodable(d) => corrupt(d.toLong)
+        case _ => false
+      }), s"strict decode must fail naming a corrupt doc: $strictErr")
 
     // NULL payloads and empty containers are rejects, never NPE/div-zero
     val nullMedia = spark.createDataFrame(
@@ -896,6 +907,14 @@ class Round8OpsSpec extends SparkSpec {
     assert(bad.length === 1 && bad.head.getString(0) === "sA"
       && bad.head.getAs[String]("err") != null, s"expected one quarantine row: ${bad.toSeq}")
     assert(good.length === 1 && good.head.getAs[Long]("doc_id") === 2L)
+    // the strict reader is the same walk plus a check: the poison fails the
+    // task with its own message, even through a consumer that reads none
+    // of the check's columns
+    val strictErr = intercept[Exception](
+      WarcIngest.records(poisoned).groupBy("source").count().collect())
+    assert(Iterator.iterate[Throwable](strictErr)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains(bad.head.getAs[String]("err"))),
+      s"strict records must fail with the poison's message: $strictErr")
   }
 
   test("contaminationScore: split runs don't merge across a gap") {

@@ -119,5 +119,13 @@ class WarcGzSpec extends SparkSpec {
     assert(bad.length == 1 && bad.head.getAs[String]("err") != null)
     assert(good.map(_.getAs[Long]("doc_id")).toSet == Set(1L),
       "the response member before the poison must survive (ranged-reader semantics)")
+    // the strict reader is the same walk plus a check: the poison fails the
+    // task with its own message, even through a consumer that reads none
+    // of the check's columns
+    val strictErr = intercept[Exception](
+      WarcIngest.recordsGz(poisoned).groupBy("source").count().collect())
+    assert(Iterator.iterate[Throwable](strictErr)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains(bad.head.getAs[String]("err"))),
+      s"strict recordsGz must fail with the poison's message: $strictErr")
   }
 }

@@ -19,11 +19,16 @@ object Util {
     * no-exchange contract on the fact stream, which is what the
     * unconditional hint guaranteed and what a stats-blind drop would
     * silently shuffle every micro-batch. Reads plan stats — no Spark job. */
-  def broadcastIfSmall(dim: DataFrame, maxBytes: Long): DataFrame = {
+  def broadcastIfSmall(dim: DataFrame, maxBytes: Long): DataFrame =
+    if (fitsBroadcast(dim, maxBytes)) broadcast(dim) else dim
+
+  /** The size test of [[broadcastIfSmall]]: known-small or unknown. Also
+    * gates the CDR dimension index ([[graft.cdr.DimIndex]]), so the index
+    * and the broadcast joins it replaces share one size rule. */
+  def fitsBroadcast(dim: DataFrame, maxBytes: Long): Boolean = {
     val size = dim.queryExecution.optimizedPlan.stats.sizeInBytes
-    val unknown =
-      size >= BigInt(dim.sparkSession.sessionState.conf.defaultSizeInBytes)
-    if (unknown || size <= BigInt(maxBytes)) broadcast(dim) else dim
+    size >= BigInt(dim.sparkSession.sessionState.conf.defaultSizeInBytes) ||
+      size <= BigInt(maxBytes)
   }
 
   /** The one JSON serializer of every measurement record (Bench, Verify,

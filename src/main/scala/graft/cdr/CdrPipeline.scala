@@ -9,27 +9,32 @@ import org.apache.spark.sql.functions._
   * batch (DuckDB-oracle mode) and Structured Streaming (graft.streaming).
   *
   * Scale notes (100 TB):
-  *  - Both enrichment joins keep the *fact* side shuffle-free: the dimensions
+  *  - Both enrichments keep the *fact* side shuffle-free: the dimensions
   *    (`imsi_msisdn`, `ms_ip_exploded`) are bounded lookup tables
-  *    (reference caches them at 100/1000 rows, flink.conf:37-48) and get a
-  *    `broadcast()` hint, so J1–J4 lower to BroadcastHashJoin — no exchange
-  *    on the CDR stream. The hint is SIZE-CONDITIONAL
-  *    ([[graft.Util.broadcastIfSmall]], shared with the streaming linkage
-  *    dim join so the safety logic can't drift): it
-  *    is emitted only while Catalyst's own size estimate of the dim plan
-  *    stays under `dimMaxBytes`, so a dimension that outgrows executor
-  *    memory degrades to Catalyst's shuffled-hash/SMJ choice instead of
-  *    OOMing on a forced build side (no human in the loop at 3am); dims
-  *    routed through `DimensionCache` count eagerly, so a genuinely
-  *    oversized dim always reaches the known-big arm there. The range
-  *    predicate of J3/J4 stays a post-join filter either way.
+  *    (reference caches them at 100/1000 rows, flink.conf:37-48). While
+  *    both pass the broadcast size rule ([[graft.Util.fitsBroadcast]]:
+  *    Catalyst's size estimate under [[DimBroadcastMaxBytes]], or unknown),
+  *    [[twoBranch]] builds a [[DimIndex]] — imsi → msisdns and
+  *    (probe, ip) → sorted session starts with their tie groups, in
+  *    primitive arrays behind two broadcasts — and J1–J4 become per-row
+  *    lookups: no join, no exchange, and branch 2 carries one tie group
+  *    per exploded (CDR, ip) into the dedup instead of every earlier
+  *    session. A long-running stream builds the index once per dimension
+  *    snapshot (`CdrStreamJob.runForeachBatch`). A dimension over the rule
+  *    keeps the joins, each with the size-conditional broadcast hint
+  *    ([[graft.Util.broadcastIfSmall]]): a dimension that outgrows
+  *    executor memory degrades to Catalyst's shuffled-hash/SMJ choice
+  *    instead of OOMing on a forced build side, and the range predicate
+  *    of J3/J4 stays a post-join filter. Dims routed through
+  *    `DimensionCache` count eagerly, so their size is always known.
   *  - The only shuffle in the whole pipeline is the argmax dedup (A1/A2),
   *    keyed by `unique_cdr_id` — exactly where the reference shuffles too
   *    (its keyBy, EnrichmentApp.java:146). Key cardinality ~ |CDRs|, values
-  *    per key are the explode×join fan-out (small, bounded by IPs×sessions),
-  *    so there is no skew hazard; AQE handles stragglers.
+  *    per key are the IPs × the latest session's tie group (IPs × every
+  *    earlier session on the join shape), so there is no skew hazard; AQE
+  *    handles stragglers.
   *  - explode (T2) is a narrow op; the F1 empty-token filter runs before the
-  *    join so dead rows never reach the shuffle.
+  *    enrichment so dead rows never reach the shuffle.
   */
 object CdrPipeline {
 
@@ -171,15 +176,51 @@ object CdrPipeline {
 
   /** The reference's two-branch plan (EnrichmentAppWithoutExplode.run):
     * F2/F3 branch split on `imsi IS NULL`, J2 lookup enrichment for the
-    * known half ([[knownBranch]]), T2→J4 explode/range-join
-    * ([[unknownJoin]]) then `dedup` for the unknown half, P7 projection,
-    * K4 union. The argmax step is the only one the batch and streaming
-    * forms differ in. */
+    * known half, T2→J4 explode/range enrichment then `dedup` for the
+    * unknown half, P7 projection, K4 union. The argmax step is the only one
+    * the batch and streaming forms differ in.
+    *
+    * When both dimensions pass the broadcast size rule, the enrichment runs
+    * from a [[DimIndex]] built here from them (see the overload); otherwise
+    * through the joins of [[joinShape]]. Both shapes give the same rows
+    * after `dedup`. */
   def twoBranch(src: DataFrame, imsiMsisdn: DataFrame, msIpExploded: DataFrame)
-               (dedup: DataFrame => DataFrame): DataFrame = {
+               (dedup: DataFrame => DataFrame): DataFrame =
+    DimIndex.build(imsiMsisdn, msIpExploded) match {
+      case Some(index) => twoBranch(src, index)(dedup)
+      case None => joinShape(src, imsiMsisdn, msIpExploded)(dedup)
+    }
+
+  /** [[twoBranch]] through the joins [[knownBranch]] and [[unknownJoin]]:
+    * the shape for dimensions over the broadcast size rule. */
+  private[graft] def joinShape(src: DataFrame, imsiMsisdn: DataFrame, msIpExploded: DataFrame)
+                              (dedup: DataFrame => DataFrame): DataFrame = {
     val ext = extendWithPartitionCols(src)
     knownBranch(ext, imsiMsisdn, "left_outer")
       .unionByName(projectToSink(dedup(unknownJoin(ext, msIpExploded))))
+  }
+
+  /** [[twoBranch]] enriched from a prebuilt [[DimIndex]]. Branch 1 is one
+    * lookup plus `explode_outer`: one row per dim row of the imsi, the CDR
+    * alone on a miss — the left lookup join's rows. Branch 2 gives each
+    * exploded (CDR, ip) only the rows of its latest session at or before
+    * the CDR's `start_time`, the whole tie group, or the CDR alone when no
+    * session matches. The range join's other rows are outranked on
+    * `_start_time` by a row of the same (CDR, ip), so `dedup` — which keys
+    * on `_start_time` first — picks the same winner from either. */
+  def twoBranch(src: DataFrame, index: DimIndex)(dedup: DataFrame => DataFrame): DataFrame = {
+    val ext = extendWithPartitionCols(src)
+    val known = ext.filter(col("imsi").isNotNull)
+      .withColumn("_msisdn", explode_outer(index.msisdns(col("imsi"))))
+      .withColumn("msisdn", coalesce(col("_msisdn"), col("msisdn")))
+    val unknown = explodeIps(ext.filter(col("imsi").isNull))
+      .withColumn("_s", explode_outer(
+        index.latestSession(col("probe"), col("ip"), col("start_time"))))
+      .withColumn("_start_time", timestamp_micros(col("_s.start_us")))
+      .withColumn("imsi", coalesce(col("_s.imsi"), col("imsi")))
+      .withColumn("msisdn", coalesce(col("_s.msisdn"), col("msisdn")))
+      .drop("_s")
+    projectToSink(known).unionByName(projectToSink(dedup(unknown)))
   }
 
   /** Branch 1 over the partition-extended source: the rows with an `imsi`,
@@ -200,4 +241,8 @@ object CdrPipeline {
     * SCALE.md "argmax at scale". */
   def full(src: DataFrame, imsiMsisdn: DataFrame, msIpExploded: DataFrame): DataFrame =
     twoBranch(src, imsiMsisdn, msIpExploded)(dedupLatestAgg)
+
+  /** [[full]] enriched from a prebuilt [[DimIndex]]. */
+  def full(src: DataFrame, index: DimIndex): DataFrame =
+    twoBranch(src, index)(dedupLatestAgg)
 }

@@ -122,12 +122,6 @@ object GzipMembers {
     bos.toByteArray
   }
 
-  /** Walk a concatenation of gzip members; returns (memberOffset,
-    * inflatedBytes) per member, strict: trailing garbage, a bad header,
-    * a truncated body, or a CRC/ISIZE mismatch all throw. */
-  def members(bytes: Array[Byte]): IndexedSeq[(Long, Array[Byte])] =
-    memberIterator(bytes).toIndexedSeq
-
   /** Lazy member walk: each `next()` inflates ONE member, so a poison
     * member throws only when reached and every member before it has
     * already been yielded — exactly a ranged reader's failure semantics

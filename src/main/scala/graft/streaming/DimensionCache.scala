@@ -11,7 +11,8 @@ import org.apache.spark.sql.DataFrame
   * reference's *freshness contract* (rows at most `ttlMs` stale) at the
   * snapshot level: `get()` re-runs the loader — e.g. `spark.read.jdbc` —
   * only when the held snapshot has expired, otherwise every micro-batch
-  * reuses the same (typically broadcast) DataFrame and its cached plan.
+  * gets the same cached DataFrame. `CdrStreamJob.runForeachBatch` keys its
+  * dimension index on that identity: a new snapshot, a new index.
   *
   * Per-*key* expiry vs per-*snapshot* refresh can differ transiently: a key
   * loaded 59 s ago is served from snapshot here but would be re-fetched at

@@ -1,9 +1,14 @@
 package graft
 
+import java.nio.file.Files
 import java.sql.Timestamp
 
 import graft.cdr.{CdrPipeline, CdrTables}
+import graft.streaming.{CdrStreamJob, CsvCodec}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.Join
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.{col, max}
 
 /** Unit coverage per SURVEY §5.1: one test per §2 operator family, including
   * the edge semantics the reference depends on (empty-token filtering, NULL
@@ -186,5 +191,104 @@ class CdrPipelineSpec extends SparkSpec {
       CdrTables.imsiMsisdn(spark, sf), CdrTables.msIpExploded(spark, sf))
     assert(sqlOut.exceptAll(dfOut).isEmpty && dfOut.exceptAll(sqlOut).isEmpty)
     assert(sqlOut.count() == dfOut.count())
+  }
+
+  // ---- dimension index vs joins on hand-built adversarial dims
+
+  private val t1 = ts("2024-01-15 08:00:00.000001")
+  private val t2 = ts("2024-01-15 09:00:00.123456")
+  private val t3 = ts("2024-01-15 09:30:00")
+
+  private def adversarialImsi: DataFrame = Seq[(Option[Long], Option[Long])](
+    (Some(100L), Some(777L)), (Some(100L), Some(778L)), // duplicated key: one row each
+    (Some(101L), None),                                 // NULL msisdn: the CDR keeps its own
+    (None, Some(555L))                                  // NULL key: matches nothing
+  ).toDF("imsi", "msisdn")
+
+  private def adversarialMsIp: DataFrame = Seq[(Option[Timestamp], Option[Long], Option[Long], Option[String], Option[String])](
+    (Some(t1), Some(201L), Some(301L), Some("vi"), Some("10.0.0.1")),
+    (Some(t2), Some(202L), Some(302L), Some("vi"), Some("10.0.0.1")),
+    (Some(t2), Some(202L), None, Some("vi"), Some("10.0.0.1")),       // tied, NULL msisdn
+    (Some(t3), Some(203L), Some(303L), None, Some("10.0.0.1")),       // NULL probe
+    (Some(t3), Some(204L), Some(304L), Some("vi"), None),             // NULL ip
+    (None, Some(205L), Some(305L), Some("vi"), Some("10.0.0.1")),     // NULL start_time
+    (None, Some(206L), Some(306L), Some("vi"), Some("10.0.0.9")),     // 10.0.0.9's only row
+    (Some(t1), Some(207L), Some(307L), Some("vi"), Some("10.0.0.2")),
+    (Some(t1), Some(208L), Some(308L), Some("vi"), Some("10.0.0.2")), // tied, imsi decides
+    (Some(t2), Some(209L), None, Some("sp"), Some("10.0.0.1"))
+  ).toDF("start_time", "imsi", "msisdn", "probe", "ip")
+
+  private def adversarialSrc: DataFrame = Seq[(Option[Timestamp], Option[String], Option[Long], Option[Long], String, Long)](
+    (Some(t3), Some("vi_probe"), Some(100L), None, ";10.0.0.1;", 1L),
+    (Some(t3), Some("vi_probe"), Some(101L), Some(42L), ";10.0.0.1;", 2L),
+    (Some(t3), Some("vi_probe"), Some(999L), None, ";10.0.0.1;", 3L),
+    // exactly at the t2 session start; its own msisdn outranks 302, so the
+    // tied NULL-msisdn dim row wins once coalesced
+    (Some(t2), Some("vi_probe"), None, Some(999999L), ";10.0.0.1;", 4L),
+    (Some(ts("2024-01-15 09:00:00.123455")), Some("vi_probe"), None, None, ";10.0.0.1;", 5L),
+    (Some(ts("2024-01-15 07:00:00")), Some("vi_probe"), None, None, ";10.0.0.1;10.0.0.9;", 6L),
+    (Some(t3), Some("vi_probe"), None, None, ";10.0.0.1;10.0.0.2;", 7L),
+    (Some(t3), Some("vi_probe"), None, None, ";10.0.0.2;", 8L),
+    (Some(t3), Some("sp_probe"), None, None, ";10.0.0.1;", 8L),
+    (None, Some("vi_probe"), None, None, ";10.0.0.1;", 9L),
+    (Some(t3), None, None, None, ";10.0.0.1;", 10L)
+  ).toDF("start_time", "measuring_probe_name", "imsi", "msisdn", "ms_ip_address", "unique_cdr_id")
+
+  private def joinCount(df: DataFrame): Int =
+    df.queryExecution.optimizedPlan.collect { case j: Join => j }.size
+
+  test("dimension index: full equals the join shape as a multiset on adversarial dims") {
+    val (src, imsi, msIp) = (adversarialSrc, adversarialImsi, adversarialMsIp)
+    val viaIndex = CdrPipeline.full(src, imsi, msIp)
+    // the join shape twoBranch keeps for dims over the size rule
+    val ext = CdrPipeline.extendWithPartitionCols(src)
+    val viaJoins = CdrPipeline.knownBranch(ext, imsi, "left_outer").unionByName(
+      CdrPipeline.projectToSink(CdrPipeline.dedupLatestAgg(CdrPipeline.unknownJoin(ext, msIp))))
+    assert(joinCount(viaIndex) == 0, viaIndex.queryExecution.optimizedPlan.treeString)
+    assert(joinCount(viaJoins) == 2, viaJoins.queryExecution.optimizedPlan.treeString)
+    assert(viaIndex.schema.map(f => f.name -> f.dataType) == viaJoins.schema.map(f => f.name -> f.dataType))
+    assert(viaIndex.exceptAll(viaJoins).isEmpty && viaJoins.exceptAll(viaIndex).isEmpty)
+    val got = viaIndex.select("unique_cdr_id", "imsi", "msisdn")
+      .as[(Long, Option[Long], Option[Long])].collect().groupBy(_._1)
+    assert(got(1L).map(_._3).sorted.toSeq == Seq(Some(777L), Some(778L)))
+    assert(got(2L).toSeq == Seq((2L, Some(101L), Some(42L))))
+    assert(got(3L).toSeq == Seq((3L, Some(999L), None)))
+    assert(got(4L).toSeq == Seq((4L, Some(202L), Some(999999L))))
+    assert(got(5L).toSeq == Seq((5L, Some(201L), Some(301L))))
+    assert(got(6L).toSeq == Seq((6L, None, None)))
+    assert(got(7L).toSeq == Seq((7L, Some(202L), Some(302L))))
+    assert(got(8L).toSeq == Seq((8L, Some(209L), None)))
+    assert(got(9L).toSeq == Seq((9L, None, None)))
+    assert(got(10L).toSeq == Seq((10L, None, None)))
+  }
+
+  test("dimension index: enrichedStream emits one tied-latest row per id on adversarial dims") {
+    val (src, imsi, msIp) = (adversarialSrc, adversarialImsi, adversarialMsIp)
+    val ext = CdrPipeline.extendWithPartitionCols(src)
+    val branch1 = CdrPipeline.knownBranch(ext, imsi, "left_outer").collect().toSeq
+    val joined = CdrPipeline.unknownJoin(ext, msIp)
+    val latest = joined.groupBy("unique_cdr_id").agg(max("_start_time").as("_latest"))
+    val tied = CdrPipeline.projectToSink(joined.join(latest, "unique_cdr_id")
+      .filter(col("_start_time") <=> col("_latest"))).collect().toSet
+    val ids = ext.filter(col("imsi").isNull).select("unique_cdr_id").distinct().count()
+
+    val mem = MemoryStream[String](spark)
+    mem.addData(src.select(CsvCodec.encode(src)).as[String].collect().toSeq: _*)
+    val q = CdrStreamJob.enrichedStream(CsvCodec.decode(mem.toDF()), imsi, msIp, gapMs = 500L)
+      .writeStream.format("memory").queryName("adversarial_out").outputMode("append")
+      .option("checkpointLocation", Files.createTempDirectory("graft-ckpt-adv").toString).start()
+    val out = try {
+      // SessionDedup emits on its processing-time gap: poll, don't block
+      val deadline = System.currentTimeMillis() + 180000
+      def n() = spark.table("adversarial_out").count()
+      while (n() < branch1.size + ids && System.currentTimeMillis() < deadline) Thread.sleep(200)
+      spark.table("adversarial_out").collect().toSeq
+    } finally q.stop()
+    val knownIds = branch1.map(_.getAs[Long]("unique_cdr_id")).toSet
+    val (known, unknown) = out.partition(r => knownIds(r.getAs[Long]("unique_cdr_id")))
+    assert(known.groupBy(identity).map { case (r, rs) => r -> rs.size } ==
+      branch1.groupBy(identity).map { case (r, rs) => r -> rs.size })
+    assert(unknown.size == ids && unknown.map(_.getAs[Long]("unique_cdr_id")).distinct.size == ids)
+    unknown.foreach(r => assert(tied.contains(r), s"$r is not tied for its id's latest session"))
   }
 }

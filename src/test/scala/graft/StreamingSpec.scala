@@ -2,10 +2,13 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import graft.cdr.{CdrPipeline, CdrTables}
 import graft.streaming.{CdrStreamJob, CsvCodec, DimensionCache, SessionDedup}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Streaming e2e per SURVEY §5.3: MemoryStream → pipeline → memory/file sink,
   * asserting the streaming plans produce exactly what the batch (oracle-
@@ -59,6 +62,94 @@ class StreamingSpec extends SparkSpec {
     val gotKeys = got.select(concat_ws("|", key: _*)).as[String].collect().sorted
     val expKeys = expected.select(concat_ws("|", key: _*)).as[String].collect().sorted
     assert(gotKeys.toSeq == expKeys.toSeq)
+  }
+
+  test("foreachBatch runner: one dimension index per snapshot, two jobs per batch, rebuilt on refresh") {
+    val out = tmp("graft-index-out")
+    val loads = new java.util.concurrent.atomic.AtomicInteger()
+    @volatile var msisdn = 777L
+    val imsiCache = new DimensionCache(() => {
+      loads.incrementAndGet(); Seq((900L, msisdn)).toDF("imsi", "msisdn")
+    }, 600000L)
+    val msIpCache = new DimensionCache(() => {
+      loads.incrementAndGet()
+      Seq((java.sql.Timestamp.valueOf("2024-01-15 08:00:00"), 201L, 301L, "vi", "10.0.0.1"))
+        .toDF("start_time", "imsi", "msisdn", "probe", "ip")
+    }, 600000L)
+    // each job's description: the index build's own, or the micro-batch's
+    // (StreamExecution ends it with "batch = <id>")
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(Option(js.properties).flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    def settled(): Seq[String] = { // the listener bus is async
+      var prev = -1
+      while (jobs.size != prev) { prev = jobs.size; Thread.sleep(300) }
+      jobs.toArray(Array.empty[String]).toSeq
+    }
+    def indexJobs() = settled().count(_ == "cdr dim index")
+    def batchJobs(id: Long) = settled().count(_.endsWith(s"batch = $id"))
+    def line(id: Int, imsi: String) = s"2024-01-15 10:00:00.000000,vi_probe,$imsi,,;10.0.0.1;,$id"
+    val mem = MemoryStream[String](spark)
+    spark.sparkContext.addSparkListener(listener)
+    val q = CdrStreamJob.runForeachBatch(
+      CsvCodec.decode(mem.toDF()), imsiCache, msIpCache, out, tmp("graft-index-ckpt"), triggerMs = 100L)
+    def compiles() = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    try {
+      val compiled = (0 until 3).map { b =>
+        mem.addData(line(2 * b, "900"), line(2 * b + 1, ""))
+        q.processAllAvailable()
+        if (b == 0) assert(indexJobs() > 0, "the first batch builds the index")
+        compiles()
+      }
+      assert(compiled(2) == compiled(1), "a batch like the one before compiles nothing")
+      assert(loads.get() == 2)
+      val built = indexJobs()
+      assert(batchJobs(1) == 2 && batchJobs(2) == 2, settled())
+      // a refreshed snapshot: the next batch builds a new index from it
+      msisdn = 778L
+      imsiCache.invalidate()
+      mem.addData(line(6, "900"))
+      q.processAllAvailable()
+      assert(loads.get() == 3)
+      assert(indexJobs() == 2 * built, "one more index build, for the new snapshot")
+    } finally {
+      q.stop()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    val got = spark.read.parquet(out).select("unique_cdr_id", "imsi", "msisdn", "batch_id")
+      .as[(Long, Option[Long], Option[Long], Long)].collect().sortBy(_._1).toSeq
+    assert(got == Seq(
+      (0L, Some(900L), Some(777L), 0L), (1L, Some(201L), Some(301L), 0L),
+      (2L, Some(900L), Some(777L), 1L), (3L, Some(201L), Some(301L), 1L),
+      (4L, Some(900L), Some(777L), 2L), (5L, Some(201L), Some(301L), 2L),
+      (6L, Some(900L), Some(778L), 3L)))
+  }
+
+  test("writeBatch: a new batch id compiles no new code; layout event_date/probe/batch_id") {
+    val out = tmp("graft-batch-layout")
+    // a local source: a `limit` plan recompiles on every run by itself
+    val full = CdrPipeline.full(
+      CsvCodec.decode(csvLines(100).toDF("value")),
+      CdrTables.imsiMsisdn(spark, sf),
+      CdrTables.msIpExploded(spark, sf))
+    def compiles() = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    CdrStreamJob.writeBatch(full, 7L, out)
+    val before = compiles()
+    CdrStreamJob.writeBatch(full, 8L, out)
+    assert(compiles() == before, "the batch id must not be compiled into the plan")
+    val root = java.nio.file.Path.of(out)
+    val files = Files.walk(root).iterator().asScala.filter(_.toString.endsWith(".parquet"))
+      .map(root.relativize(_).toString).toSeq
+    assert(files.nonEmpty)
+    files.foreach(f => assert(f.matches("event_date=[^/]+/probe=[^/]+/batch_id=(7|8)/[^/]+"), f))
+    // the directory names are what they were with a long literal: a reader
+    // declaring `batch_id` long reads the ids back as longs
+    val back = spark.read.schema(full.schema.add("batch_id", LongType)).parquet(out)
+    assert(back.schema("batch_id").dataType == LongType)
+    assert(back.select("batch_id").distinct().as[Long].collect().sorted.toSeq == Seq(7L, 8L))
+    assert(back.count() == 2 * full.count())
   }
 
   test("K1 idempotency: a replayed micro-batch rewrites its output instead of appending") {

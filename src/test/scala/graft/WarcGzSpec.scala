@@ -13,6 +13,12 @@ class WarcGzSpec extends SparkSpec {
 
   private def b(s: String) = s.getBytes(StandardCharsets.UTF_8)
 
+  /** The strict whole-container walk: (memberOffset, inflatedBytes) per
+    * member; trailing garbage, a bad header, a truncated body, or a
+    * CRC/ISIZE mismatch all throw. */
+  private def allMembers(bytes: Array[Byte]): IndexedSeq[(Long, Array[Byte])] =
+    GzipMembers.memberIterator(bytes).toIndexedSeq
+
   test("member walk: concatenated members come back in order, byte-exact, with monotone offsets") {
     val payloads = Seq("first", "second, a bit longer " * 50, "", "fourth")
     val bos = new java.io.ByteArrayOutputStream()
@@ -21,7 +27,7 @@ class WarcGzSpec extends SparkSpec {
       bos.write(GzipMembers.gzip(b(p)))
       off
     }
-    val got = GzipMembers.members(bos.toByteArray)
+    val got = allMembers(bos.toByteArray)
     assert(got.map(_._1) == offsets.toIndexedSeq,
       "each member's reported offset must be where its header starts")
     assert(got.map(m => new String(m._2, StandardCharsets.UTF_8))
@@ -42,7 +48,7 @@ class WarcGzSpec extends SparkSpec {
     bos.write(b("a comment")); bos.write(0)              // FCOMMENT
     bos.write(Array[Byte](0x12, 0x34))                   // FHCRC (not verified — skipped)
     bos.write(deflateAndTrailer)
-    val got = GzipMembers.members(bos.toByteArray)
+    val got = allMembers(bos.toByteArray)
     assert(got.size == 1 &&
       new String(got.head._2, StandardCharsets.UTF_8) == "payload under test")
   }
@@ -51,10 +57,10 @@ class WarcGzSpec extends SparkSpec {
     val good = GzipMembers.gzip(b("x" * 100))
     val badCrc = good.clone()
     badCrc(badCrc.length - 8) = (badCrc(badCrc.length - 8) ^ 0xff).toByte
-    val e1 = intercept[IllegalArgumentException](GzipMembers.members(badCrc))
+    val e1 = intercept[IllegalArgumentException](allMembers(badCrc))
     assert(e1.getMessage.contains("CRC32"))
     val e2 = intercept[IllegalArgumentException](
-      GzipMembers.members(good.take(good.length / 2)))
+      allMembers(good.take(good.length / 2)))
     assert(e2.getMessage.contains("gzip"))
   }
 
@@ -65,11 +71,11 @@ class WarcGzSpec extends SparkSpec {
     // materializing the inflated bytes
     val bomb = GzipMembers.gzip(new Array[Byte](128 << 20))
     assert(bomb.length < (1 << 20), "fixture: the bomb must be small on the wire")
-    val e = intercept[IllegalArgumentException](GzipMembers.members(bomb))
+    val e = intercept[IllegalArgumentException](allMembers(bomb))
     assert(e.getMessage.contains("bomb"), e.getMessage)
     // ordinary text members (well under the cap) are untouched by the gate
     val ok = GzipMembers.gzip(b("normal text " * 1000))
-    assert(new String(GzipMembers.members(ok).head._2, StandardCharsets.UTF_8)
+    assert(new String(allMembers(ok).head._2, StandardCharsets.UTF_8)
       == "normal text " * 1000)
     // LEGITIMATE highly-repetitive crawl content — whitespace/table-heavy
     // HTML with a counter every 8th row — compresses ~130:1, past the old
@@ -87,7 +93,7 @@ class WarcGzSpec extends SparkSpec {
     assert(ratio > 64 && ratio < 256,
       f"fixture drifted out of the cap gap: ratio $ratio%.1f")
     assert(html.length > (1 << 20), "fixture must inflate past the floor")
-    assert(new String(GzipMembers.members(rep).head._2, StandardCharsets.UTF_8)
+    assert(new String(allMembers(rep).head._2, StandardCharsets.UTF_8)
       == html, "legitimate repetitive member was quarantined by the cap")
   }
 
@@ -108,7 +114,7 @@ class WarcGzSpec extends SparkSpec {
     val cont = WarcIngest.containersGz(docs).collect()
     assert(cont.length == 1)
     val bytes = cont.head.getAs[Array[Byte]]("payload")
-    val members = GzipMembers.members(bytes)
+    val members = allMembers(bytes)
     assert(members.size == 3, "warcinfo + 2 responses expected")
     // keep the first two members intact, truncate the third mid-body
     val cut = (members(2)._1 + 12).toInt

@@ -76,8 +76,11 @@ object CdrPipeline {
 
   /** J1/J2 + P6: subscriber lookup join on `imsi` with coalesce-merge
     * (EnrichmentApp.java:300-318, EnrichmentAppWithoutExplode.java:275-293).
-    * Stream-static semantics: the static side is (re)read per micro-batch ⇒
-    * as-of-processing-time, matching FOR SYSTEM_TIME AS OF proc_time. */
+    * Stream-static semantics: the production runner does not re-read the
+    * static side per micro-batch; it enriches from a [[DimIndex]] built once
+    * per dimension snapshot, so a row sees the snapshot current at its
+    * trigger — FOR SYSTEM_TIME AS OF proc_time up to the cache TTL, as with
+    * the reference's lookup cache. */
   def lookupEnrich(src: DataFrame, imsiMsisdn: DataFrame, joinType: String,
                    dimMaxBytes: Long = DimBroadcastMaxBytes): DataFrame = {
     val dim = imsiMsisdn.select(col("imsi").as("_imsi"), col("msisdn").as("_msisdn"))

@@ -76,17 +76,7 @@ object BpeTrainer {
         var i = 0
         while (i < ms.length) {
           val (a, b) = ms(i)
-          if (syms.length >= 2) {
-            val out = scala.collection.mutable.ArrayBuffer.empty[String]
-            var j = 0
-            var changed = false
-            while (j < syms.length) {
-              if (j + 1 < syms.length && syms(j) == a && syms(j + 1) == b) {
-                out += (a + b); changed = true; j += 2
-              } else { out += syms(j); j += 1 }
-            }
-            if (changed) syms = out.toArray
-          }
+          if (syms.length >= 2) syms = mergeOnce(syms, a, b)
           i += 1
         }
         // positional Row against words.schema — fill by field index rather
@@ -96,6 +86,21 @@ object BpeTrainer {
         Row.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(vals))
       }
     }(enc)
+  }
+
+  /** The merge kernel of both loop forms: merge (a, b) into `syms` left to
+    * right, non-overlapping — the [[applyMerge]] rule. Returns `syms`
+    * itself when no occurrence was merged. */
+  private def mergeOnce(syms: Array[String], a: String, b: String): Array[String] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[String]
+    var j = 0
+    var changed = false
+    while (j < syms.length) {
+      if (j + 1 < syms.length && syms(j) == a && syms(j + 1) == b) {
+        out += (a + b); changed = true; j += 2
+      } else { out += syms(j); j += 1 }
+    }
+    if (changed) out.toArray else syms
   }
 
   /** Run k merge steps; returns the learned merges and the final
@@ -214,14 +219,19 @@ object BpeTrainer {
     * final word table. */
   def bpeTokenCounts(docs: DataFrame, k: Int): DataFrame = {
     val (_, words) = train(docs, k)
-    val wordLens = words.select(col("word"), size(col("syms")).as("n_syms"))
+    tokenCountsOf(docs, words.select(col("word"), size(col("syms")).as("n_syms")))
+  }
+
+  /** Per-document (n_bpe_tokens, n_words) over a (word, n_syms) table —
+    * the one corpus join and rollup of the trained and the stored-merge
+    * counts. */
+  private def tokenCountsOf(docs: DataFrame, wordLens: DataFrame): DataFrame =
     docs.select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
       .filter(length(col("word")) >= 1)
       .join(wordLens, "word")
       .groupBy("doc_id")
       .agg(sum(col("n_syms")).cast("long").as("n_bpe_tokens"),
         count(lit(1)).cast("long").as("n_words"))
-  }
 
   /** Persist the learned merge table — train once, tokenize forever (the
     * [[graft.llm.TextAnalysis.writeNbWeights]] stored-artifact pattern):
@@ -279,16 +289,8 @@ object BpeTrainer {
     while (i < ms.length) {
       val (a, b) = ms(i)
       if (syms.length >= 2 && present(a) && present(b)) {
-        // left-to-right non-overlapping application — the applyMerge rule
-        val out = scala.collection.mutable.ArrayBuffer.empty[String]
-        var j = 0
-        var changed = false
-        while (j < syms.length) {
-          if (j + 1 < syms.length && syms(j) == a && syms(j + 1) == b) {
-            out += (a + b); changed = true; j += 2
-          } else { out += syms(j); j += 1 }
-        }
-        if (changed) { syms = out.toArray; present += (a + b) }
+        val merged = mergeOnce(syms, a, b)
+        if (merged ne syms) { syms = merged; present += (a + b) }
       }
       i += 1
     }
@@ -308,13 +310,7 @@ object BpeTrainer {
     // the r12 cut derived counts by exploding every word to per-symbol
     // rows and re-aggregating, which added a symbol-table-sized shuffle
     // to the hot apply path for nothing (review-caught)
-    val wordLens = wordLensAgainstMerges(docs, loadMerges(docs.sparkSession, path))
-    docs.select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
-      .filter(length(col("word")) >= 1)
-      .join(wordLens, "word")
-      .groupBy("doc_id")
-      .agg(sum(col("n_syms")).cast("long").as("n_bpe_tokens"),
-        count(lit(1)).cast("long").as("n_words"))
+    tokenCountsOf(docs, wordLensAgainstMerges(docs, loadMerges(docs.sparkSession, path)))
   }
 
   /** Concat-and-cut sequence packing with the budget measured in BPE
@@ -335,12 +331,7 @@ object BpeTrainer {
       .join(bpeTokenCounts(docs, k)
         .select(col("doc_id"), col("n_bpe_tokens").as("n_tokens")), "doc_id")
       .localCheckpoint(eager = true)
-    graft.operators.PrefixSum.cumStart(perDoc, "n_tokens",
-        perDoc.select(col("doc_id")),
-        graft.operators.PrefixSum.defaultBuckets(docs))
-      .select(col("doc_id"), col("source"), col("n_tokens"),
-        expr(s"cum_start div $budget").as("pack_id"),
-        expr(s"cum_start % $budget").as("pack_offset"))
+    TextAnalysis.packOffsets(perDoc, docs, budget)
   }
 
   /** Per-document BPE token-ID sequences after k merges — the tokenizer

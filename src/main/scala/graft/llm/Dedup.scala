@@ -1438,19 +1438,20 @@ object Dedup {
           .as("clean_text"))
   }
 
+  /** The embedding-pair scorers' one tail: the rounded cosine of every
+    * candidate (id_a, va, na, id_b, vb, nb) pair, kept at ≥ threshold. */
+  private def scoredPairs(cand: DataFrame, threshold: Double): DataFrame =
+    cand.withColumn("cosine", Similarity.roundedCosine("va", "vb", "na", "nb"))
+      .filter(col("cosine") >= threshold)
+      .select(col("id_a"), col("id_b"), col("cosine"))
+
   /** Embedding-cosine near-dup pairs ≥ threshold. Brute-force pairwise (the
     * correctness baseline); the ANN/LSH scale path is in [[Similarity]]. */
   def embeddingPairs(emb: DataFrame, threshold: Double): DataFrame = {
-    val e = emb.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .withColumn("nrm", graft.functions.VectorFunctions.vecNorm(col("v")))
+    val e = Similarity.normed(emb)
     val a = e.select(col("vec_id").as("id_a"), col("v").as("va"), col("nrm").as("na"))
     val b = e.select(col("vec_id").as("id_b"), col("v").as("vb"), col("nrm").as("nb"))
-    a.join(b, col("id_a") < col("id_b"))
-      .withColumn("cosine", round(
-        graft.functions.VectorFunctions.vecDot(col("va"), col("vb")) /
-          (col("na") * col("nb")), 6))
-      .filter(col("cosine") >= threshold)
-      .select(col("id_a"), col("id_b"), col("cosine"))
+    scoredPairs(a.join(b, col("id_a") < col("id_b")), threshold)
   }
 
   /** LSH-bucketed embedding near-dup pairs — the 100 TB twin of
@@ -1473,12 +1474,7 @@ object Dedup {
       col("nrm").as("na"), col("bucket"))
     val c = b.select(col("vec_id").as("id_b"), col("v").as("vb"),
       col("nrm").as("nb"), col("bucket"))
-    a.join(c, Seq("bucket")).filter(col("id_a") < col("id_b"))
-      .withColumn("cosine", round(
-        graft.functions.VectorFunctions.vecDot(col("va"), col("vb")) /
-          (col("na") * col("nb")), 6))
-      .filter(col("cosine") >= threshold)
-      .select(col("id_a"), col("id_b"), col("cosine"))
+    scoredPairs(a.join(c, Seq("bucket")).filter(col("id_a") < col("id_b")), threshold)
   }
 
   /** Multi-family twin of [[embeddingPairsLsh]] — the recall knob for the
@@ -1508,14 +1504,10 @@ object Dedup {
         Seq("fam", "bucket"))
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b").distinct()
-    cand
+    scoredPairs(cand
       .join(e.select(col("vec_id").as("id_a"), col("v").as("va"), col("nrm").as("na")), "id_a")
-      .join(e.select(col("vec_id").as("id_b"), col("v").as("vb"), col("nrm").as("nb")), "id_b")
-      .withColumn("cosine", round(
-        graft.functions.VectorFunctions.vecDot(col("va"), col("vb")) /
-          (col("na") * col("nb")), 6))
-      .filter(col("cosine") >= threshold)
-      .select(col("id_a"), col("id_b"), col("cosine"))
+      .join(e.select(col("vec_id").as("id_b"), col("v").as("vb"), col("nrm").as("nb")), "id_b"),
+      threshold)
   }
 
   /** Embedding near-dup *clusters*: connected components over the

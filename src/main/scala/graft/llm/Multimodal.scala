@@ -106,18 +106,20 @@ object Multimodal {
     StructField("payload", BinaryType),
     StructField("format", StringType)))
 
-  /** Real media table: one genuine PNG/JPEG payload per document, encoded
-    * partition-wise (no driver loop, no bundled binaries). */
-  def realMediaTable(docs: DataFrame): DataFrame = {
-    val enc = RowEncoder.encoderFor(mediaSchema)
+  /** A (doc_id, payload, format) media table: `payload(d)` per document,
+    * encoded partition-wise (no driver loop, no bundled binaries) — the
+    * one builder under every `real*Table`. */
+  private def payloadTable(docs: DataFrame)(payload: Long => (Array[Byte], String)): DataFrame =
     docs.select(col("doc_id")).mapPartitions { rows =>
       rows.map { r =>
         val d = r.getLong(0)
-        val (bytes, fmt) = imageBytes(d)
+        val (bytes, fmt) = payload(d)
         Row(d, bytes, fmt)
       }
-    }(enc)
-  }
+    }(RowEncoder.encoderFor(mediaSchema))
+
+  /** Real media table: one genuine PNG/JPEG payload per document. */
+  def realMediaTable(docs: DataFrame): DataFrame = payloadTable(docs)(imageBytes(_))
 
   /** Partition-wise batched REAL decode: [[decodeBatchSafe]] plus the
     * strict check — a payload the codec rejects fails the task with
@@ -208,19 +210,12 @@ object Multimodal {
   /** Mixed-modality real table: a genuine image / WAV / GIF payload per
     * document by doc_id % 3 — the input shape a real media lake has (one
     * binary column, a format column, three codecs). */
-  def realMixedMediaTable(docs: DataFrame): DataFrame = {
-    val enc = RowEncoder.encoderFor(mediaSchema)
-    docs.select(col("doc_id")).mapPartitions { rows =>
-      rows.map { r =>
-        val d = r.getLong(0)
-        d % 3 match {
-          case 0 => val (b, f) = imageBytes(d); Row(d, b, f)
-          case 1 => Row(d, audioBytes(d), "wav")
-          case _ => Row(d, videoBytes(d), "gif")
-        }
-      }
-    }(enc)
-  }
+  def realMixedMediaTable(docs: DataFrame): DataFrame =
+    payloadTable(docs)(d => d % 3 match {
+      case 0 => imageBytes(d)
+      case 1 => (audioBytes(d), "wav")
+      case _ => (videoBytes(d), "gif")
+    })
 
   val probeSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType),
@@ -354,15 +349,8 @@ object Multimodal {
   }
 
   /** Real video table: one genuine animated-GIF payload per document. */
-  def realVideoTable(docs: DataFrame): DataFrame = {
-    val enc = RowEncoder.encoderFor(mediaSchema)
-    docs.select(col("doc_id")).mapPartitions { rows =>
-      rows.map { r =>
-        val d = r.getLong(0)
-        Row(d, videoBytes(d), "gif")
-      }
-    }(enc)
-  }
+  def realVideoTable(docs: DataFrame): DataFrame =
+    payloadTable(docs)(d => (videoBytes(d), "gif"))
 
   private val frameSampleSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType),
@@ -439,15 +427,8 @@ object Multimodal {
   }
 
   /** Real shard table: one genuine ZIP-of-PNG-frames payload per doc. */
-  def realShardTable(docs: DataFrame): DataFrame = {
-    val enc = RowEncoder.encoderFor(mediaSchema)
-    docs.select(col("doc_id")).mapPartitions { rows =>
-      rows.map { r =>
-        val d = r.getLong(0)
-        Row(d, shardBytes(d), "zip")
-      }
-    }(enc)
-  }
+  def realShardTable(docs: DataFrame): DataFrame =
+    payloadTable(docs)(d => (shardBytes(d), "zip"))
 
   /** Indexed frame sampling over ZIP shards — [[frameSampleReal]]'s
     * demonstration that the k/n̄ cost model HOLDS once the container has
@@ -493,15 +474,8 @@ object Multimodal {
   }
 
   /** Real audio table: one genuine WAV payload per document. */
-  def realAudioTable(docs: DataFrame): DataFrame = {
-    val enc = RowEncoder.encoderFor(mediaSchema)
-    docs.select(col("doc_id")).mapPartitions { rows =>
-      rows.map { r =>
-        val d = r.getLong(0)
-        Row(d, audioBytes(d), "wav")
-      }
-    }(enc)
-  }
+  def realAudioTable(docs: DataFrame): DataFrame =
+    payloadTable(docs)(d => (audioBytes(d), "wav"))
 
   private val pcmSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType),

@@ -2,7 +2,7 @@ package graft.llm
 
 import graft.{Tables, Util}
 import graft.functions.VectorFunctions
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -33,7 +33,11 @@ object Similarity {
     emb.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .withColumn("nrm", VectorFunctions.vecNorm(col("v")))
 
-  private val cosineExpr = VectorFunctions.vecDot(col("va"), col("vb"))
+  /** The rounded-cosine contract every scorer of the library shares:
+    * `round(dot(a, b) / (na · nb), 6)` over the named vector and norm
+    * columns. */
+  private[llm] def roundedCosine(a: String, b: String, na: String, nb: String): Column =
+    round(VectorFunctions.vecDot(col(a), col(b)) / (col(na) * col(nb)), 6)
 
   /** THE ranking contract, shared by every top-k surface (brute/LSH/IVF and
     * the multimodal embed query): scored cosine rounded to 6 dp, ranked by
@@ -55,7 +59,7 @@ object Similarity {
     val w = Window.partitionBy("query_id")
       .orderBy(col("cosine").desc, col("neighbor_id").asc)
     joined
-      .withColumn("cosine", round(cosineExpr / (col("na") * col("nb")), 6))
+      .withColumn("cosine", roundedCosine("va", "vb", "na", "nb"))
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= k)
       .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rk"))
@@ -92,7 +96,7 @@ object Similarity {
     val w = Window.partitionBy("vec_id")
       .orderBy(col("cosine").desc, col("eval_id").asc)
     tr.join(broadcast(ev))
-      .withColumn("cosine", round(cosineExpr / (col("na") * col("nb")), 6))
+      .withColumn("cosine", roundedCosine("va", "vb", "na", "nb"))
       .filter(col("cosine") >= threshold)
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") === 1)
@@ -434,8 +438,7 @@ object Similarity {
       .select(col("vec_id").as("cid"), col("v").as("cv"), col("nrm").as("cnrm"))
     for (_ <- 0 until iters) {
       val assigned = e.crossJoin(broadcast(cent))
-        .withColumn("csim", round(
-          VectorFunctions.vecDot(col("v"), col("cv")) / (col("nrm") * col("cnrm")), 6))
+        .withColumn("csim", roundedCosine("v", "cv", "nrm", "cnrm"))
         .groupBy(col("vec_id"))
         .agg(max(struct(col("csim"), (-col("cid")).as("ncid"), col("v"))).as("w"))
         .select((-col("w.ncid")).as("cid"), col("w.v").as("v"))
@@ -538,8 +541,7 @@ object Similarity {
 
   private def centroidScored(side: DataFrame, cent: DataFrame) =
     side.crossJoin(broadcast(cent))
-      .withColumn("csim",
-        round(VectorFunctions.vecDot(col("v"), col("cv")) / (col("nrm") * col("cnrm")), 6))
+      .withColumn("csim", roundedCosine("v", "cv", "nrm", "cnrm"))
 
   /** Corpus-side cell assignment: an aggregation argmax, not a window —
     * max(struct(csim, -cid)) == argmax by (csim DESC, cid ASC); -cid is
@@ -876,10 +878,7 @@ object Similarity {
         "re-key vec_id (the writeIvfIndex empty-seed guard)")
     cent.write.mode("overwrite").parquet(s"$path/centroids")
     val rsub = residualSubs(e, cent).localCheckpoint(eager = true)
-    val cbr = rsub.filter(col("vec_id") % codeMod === 0)
-      .select(col("s"), col("vec_id").as("code"), col("sub").as("cv"),
-        col("xx").as("cc"))
-      .localCheckpoint(eager = true)
+    val cbr = residualCodebook(rsub, codeMod).localCheckpoint(eager = true)
     require(!cbr.isEmpty,
       s"empty PQ codebook: no corpus vec_id % $codeMod == 0")
     cbr.write.mode("overwrite").parquet(s"$path/codebook")
@@ -899,16 +898,42 @@ object Similarity {
     * of `cent` — (vec_id, cid, s, sub, xx). Shared by the sized index
     * build and [[appendIvfPqIndex]], so build/append parity is structural,
     * not coincidental (the Dedup stored-consumer convention). */
-  private[graft] def residualSubs(e: DataFrame, cent: DataFrame): DataFrame = {
-    val subs = e.sparkSession.range(PqSubspaces).select(col("id").cast("int").as("s"))
-    assignToCells(e, cent)
-      .join(broadcast(cent.select(col("cid"), col("cv"))), "cid")
-      .select(col("neighbor_id").as("vec_id"), col("cid"),
-        zip_with(col("vb"), col("cv"), (a, b) => a - b).as("rv"))
-      .crossJoin(broadcast(subs))
-      .select(col("vec_id"), col("cid"), col("s"),
+  private[graft] def residualSubs(e: DataFrame, cent: DataFrame): DataFrame =
+    subResiduals(assignToCells(e, cent), cent, col("neighbor_id").as("vec_id"), "vb")
+
+  /** Residual subvectors of each row's vector column `v` against its cell
+    * `cid` of `cent`, keyed by `id` — (id, cid, s, sub, xx). The one split
+    * of both sides: corpus rows carry their own best cell, query rows one
+    * row per probed cell. */
+  private def subResiduals(cells: DataFrame, cent: DataFrame, id: Column,
+                           v: String): DataFrame = {
+    val subs = cells.sparkSession.range(PqSubspaces).select(col("id").cast("int").as("s"))
+    val rv = cells.join(broadcast(cent.select(col("cid"), col("cv"))), "cid")
+      .select(id, col("cid"), zip_with(col(v), col("cv"), (a, b) => a - b).as("rv"))
+    rv.crossJoin(broadcast(subs))
+      .select(col(rv.columns.head), col("cid"), col("s"),
         slice(col("rv"), col("s") * PqSubDim + 1, lit(PqSubDim)).as("sub"))
       .withColumn("xx", VectorFunctions.vecDot(col("sub"), col("sub")))
+  }
+
+  /** The residual codebook: the deterministic `vec_id % codeMod == 0`
+    * sample of the residual subvectors, as (s, code, cv, cc). */
+  private def residualCodebook(rsub: DataFrame, codeMod: Int): DataFrame =
+    rsub.filter(col("vec_id") % codeMod === 0)
+      .select(col("s"), col("vec_id").as("code"), col("sub").as("cv"), col("xx").as("cc"))
+
+  /** ADC distances from the queries `q` (vec_id, v, nrm) to the residual
+    * `codes` of their `nprobe` best cells: each query's residual per
+    * PROBED cell (the table is relative to each probed centroid) against
+    * the codebook `cbr`, summed per (query, neighbor) in exact micros. */
+  private def adcDistances(q: DataFrame, cent: DataFrame, nprobe: Int,
+                           cbr: DataFrame, codes: DataFrame): DataFrame = {
+    val qtab = subResiduals(probesOf(q, cent, nprobe), cent, col("query_id"), "va")
+      .join(broadcast(cbr), Seq("s"))
+      .select(col("query_id"), col("cid"), col("s"), col("code"), pqDistMicro.as("qdm"))
+    codes.join(broadcast(qtab), Seq("cid", "s", "code"))
+      .groupBy(col("query_id"), col("neighbor_id"))
+      .agg(sum(col("qdm")).as("approx_dist_micro"))
   }
 
   /** Residual-PQ encode against a FIXED codebook — per-(vector, subspace)
@@ -982,23 +1007,8 @@ object Similarity {
     val refine = refineOverride.getOrElse(prm.getAs[Int]("refine"))
     val cent = spark.read.parquet(s"$path/centroids")
     val cbr = spark.read.parquet(s"$path/codebook").localCheckpoint(eager = true)
-    val codes = spark.read.parquet(s"$path/codes")
-    val subs = spark.range(PqSubspaces).select(col("id").cast("int").as("s"))
     val q = normed(queries).localCheckpoint(eager = true)
-    val qtab = probesOf(q, cent, nprobe)
-      .join(broadcast(cent.select(col("cid"), col("cv"))), "cid")
-      .select(col("query_id"), col("cid"),
-        zip_with(col("va"), col("cv"), (a, b) => a - b).as("rv"))
-      .crossJoin(broadcast(subs))
-      .select(col("query_id"), col("cid"), col("s"),
-        slice(col("rv"), col("s") * PqSubDim + 1, lit(PqSubDim)).as("sub"))
-      .withColumn("xx", VectorFunctions.vecDot(col("sub"), col("sub")))
-      .join(broadcast(cbr), Seq("s"))
-      .select(col("query_id"), col("cid"), col("s"), col("code"),
-        pqDistMicro.as("qdm"))
-    val approx = codes.join(broadcast(qtab), Seq("cid", "s", "code"))
-      .groupBy(col("query_id"), col("neighbor_id"))
-      .agg(sum(col("qdm")).as("approx_dist_micro"))
+    val approx = adcDistances(q, cent, nprobe, cbr, spark.read.parquet(s"$path/codes"))
     val cand = rankByApprox(approx, k * refine)
       .select("query_id", "neighbor_id")
     val qv = q.select(col("vec_id").as("query_id"), col("v").as("va"),
@@ -1213,43 +1223,14 @@ object Similarity {
                               codeMod: Int): DataFrame = {
     val cent = e.filter(col("vec_id") % centroidMod === 0)
       .select(col("vec_id").as("cid"), col("v").as("cv"), col("nrm").as("cnrm"))
-    val subs = e.sparkSession.range(PqSubspaces).select(col("id").cast("int").as("s"))
     // every vector's residual against its OWN best cell (the codebook
     // trains on these, so it must cover queries too — both engines filter
     // the same deterministic sample out of the same assignment)
-    val rsub = assignToCells(e, cent)
-      .join(broadcast(cent.select(col("cid"), col("cv"))), "cid")
-      .select(col("neighbor_id").as("vec_id"), col("cid"),
-        zip_with(col("vb"), col("cv"), (a, b) => a - b).as("rv"))
-      .crossJoin(broadcast(subs))
-      .select(col("vec_id"), col("cid"), col("s"),
-        slice(col("rv"), col("s") * PqSubDim + 1, lit(PqSubDim)).as("sub"))
-      .withColumn("xx", VectorFunctions.vecDot(col("sub"), col("sub")))
-    val cbr = rsub.filter(col("vec_id") % codeMod === 0)
-      .select(col("s"), col("vec_id").as("code"), col("sub").as("cv"), col("xx").as("cc"))
+    val rsub = residualSubs(e, cent)
+    val cbr = residualCodebook(rsub, codeMod)
       .localCheckpoint(eager = true) // tiny; feeds both encode joins
-    val codes = rsub.filter(col("vec_id") >= nQueries)
-      .join(broadcast(cbr), Seq("s"))
-      .withColumn("dm", pqDistMicro)
-      .groupBy(col("vec_id"), col("cid"), col("s"))
-      .agg(min(struct(col("dm"), col("code"))).as("w"))
-      .select(col("vec_id").as("neighbor_id"), col("cid"), col("s"),
-        col("w.code").as("code"))
-    // query residuals are per PROBED cell (nprobe of them), not just the
-    // best cell — the ADC table is relative to each probed centroid
-    val qtab = probesOf(e.filter(col("vec_id") < nQueries), cent, nprobe)
-      .join(broadcast(cent.select(col("cid"), col("cv"))), "cid")
-      .select(col("query_id"), col("cid"),
-        zip_with(col("va"), col("cv"), (a, b) => a - b).as("rv"))
-      .crossJoin(broadcast(subs))
-      .select(col("query_id"), col("cid"), col("s"),
-        slice(col("rv"), col("s") * PqSubDim + 1, lit(PqSubDim)).as("sub"))
-      .withColumn("xx", VectorFunctions.vecDot(col("sub"), col("sub")))
-      .join(broadcast(cbr), Seq("s"))
-      .select(col("query_id"), col("cid"), col("s"), col("code"), pqDistMicro.as("qdm"))
-    codes.join(broadcast(qtab), Seq("cid", "s", "code"))
-      .groupBy(col("query_id"), col("neighbor_id"))
-      .agg(sum(col("qdm")).as("approx_dist_micro"))
+    adcDistances(e.filter(col("vec_id") < nQueries), cent, nprobe, cbr,
+      encodeResiduals(rsub.filter(col("vec_id") >= nQueries), cbr))
   }
 
   /** SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning at
@@ -1310,8 +1291,7 @@ object Similarity {
       col("v").as("vb"), col("nrm").as("nb"))
     val dropped = a.join(b, Seq("cid"))
       .filter(col("id_a") < col("id_b"))
-      .withColumn("cos", round(
-        VectorFunctions.vecDot(col("va"), col("vb")) / (col("na") * col("nb")), 6))
+      .withColumn("cos", roundedCosine("va", "vb", "na", "nb"))
       .filter(col("cos") >= threshold)
       .select(col("id_b").as("vec_id")).distinct()
     asg.join(dropped.withColumn("dup", lit(true)), Seq("vec_id"), "left_outer")
@@ -1390,8 +1370,7 @@ object Similarity {
       .select(col("neighbor_id").as("vec_id"), col("vb").as("v"),
         col("nb").as("nrm"), col("cid"))
     val dropped = asg.join(members, Seq("cid"))
-      .withColumn("cos", round(
-        VectorFunctions.vecDot(col("v"), col("mv")) / (col("nrm") * col("mnrm")), 6))
+      .withColumn("cos", roundedCosine("v", "mv", "nrm", "mnrm"))
       .filter(col("cos") >= threshold)
       .select(col("vec_id")).distinct()
     asg.join(dropped.withColumn("dup", lit(true)), Seq("vec_id"), "left_outer")

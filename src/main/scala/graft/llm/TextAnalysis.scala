@@ -839,6 +839,15 @@ object TextAnalysis {
     val perDoc = docs.select(col("doc_id"), col("source"),
         size(split(col("text"), " ")).as("n_tokens"))
       .localCheckpoint(eager = true)
+    packOffsets(perDoc, docs, budget)
+  }
+
+  /** The packers' shared tail: each per-document (doc_id, source,
+    * n_tokens) row of `perDoc` starts at its source's running token
+    * offset, and its pack id and in-pack offset follow by integer
+    * division. */
+  private[llm] def packOffsets(perDoc: DataFrame, docs: DataFrame,
+                               budget: Int): DataFrame =
     graft.operators.PrefixSum.cumStart(perDoc, "n_tokens",
         perDoc.select(col("doc_id")),
         graft.operators.PrefixSum.defaultBuckets(docs))
@@ -847,7 +856,6 @@ object TextAnalysis {
         // exactness past 2^53 cumulative tokens — real at corpus scale
         expr(s"cum_start div $budget").as("pack_id"),
         expr(s"cum_start % $budget").as("pack_offset"))
-  }
 
   /** Corpus-wide top-k word trigrams by occurrence (not per-doc distinct).
     * Partial-aggregates map-side, shuffles only (trigram, partial-count)

@@ -89,20 +89,8 @@ object TrainingShards {
     * past every earlier batch's) — growth never rewrites shipped shards,
     * so a training job's already-consumed files stay byte-stable. Ad-hoc
     * form derives the batch id from the stored manifest. */
-  def appendTrainingShards(newDocs: DataFrame, dir: String, nShards: Int): Unit = {
-    require(nShards >= 1, s"appendTrainingShards: nShards must be >= 1, got $nShards")
-    // next-batch probe + shard-base aggregation in ONE manifest pass
-    // (guide §1.2): batch = stored max + 1 makes the explicit form's
-    // strictly-before filter keep every row, so its aggregate and the
-    // probe are the same scan. A manifest with no rows starts both at the
-    // beginning: batch 1, shard 0.
-    val m = newDocs.sparkSession.read.parquet(s"$dir/manifest")
-      .agg(max(col("ingest_batch").cast("long")),
-        coalesce(max(col("shard").cast("long")), lit(-1L))).head()
-    val batch = if (m.isNullAt(0)) 1L else m.getLong(0) + 1L
-    writeShardFiles(newDocs, dir, nShards, shardBase = m.getLong(1) + 1L,
-      ingestBatch = batch, dynamic = true)
-  }
+  def appendTrainingShards(newDocs: DataFrame, dir: String, nShards: Int): Unit =
+    appendDocShards(newDocs, dir, nShards, ingestBatch = None)
 
   /** Ad-hoc [[appendSized]]: shard count sized from the increment, batch
     * id from the stored manifest (batch 0 is the build's, so a manifest
@@ -158,15 +146,46 @@ object TrainingShards {
     * BEFORE `ingestBatch`, so a replay of the same batch id lands on the
     * same shard ids and overwrites (never duplicates) its own output. */
   def appendTrainingShards(newDocs: DataFrame, dir: String, nShards: Int,
-                           ingestBatch: Long): Unit = {
+                           ingestBatch: Long): Unit =
+    appendDocShards(newDocs, dir, nShards, Some(ingestBatch))
+
+  private def appendDocShards(newDocs: DataFrame, dir: String, nShards: Int,
+                              ingestBatch: Option[Long]): Unit = {
     require(nShards >= 1, s"appendTrainingShards: nShards must be >= 1, got $nShards")
-    require(ingestBatch >= 1, s"appendTrainingShards: batch 0 is the initial build's")
-    val spark = newDocs.sparkSession
-    val base = spark.read.parquet(s"$dir/manifest")
-      .filter(col("ingest_batch").cast("long") < ingestBatch)
-      .agg(coalesce(max(col("shard").cast("long")), lit(-1L))).head().getLong(0) + 1L
-    writeShardFiles(newDocs, dir, nShards, shardBase = base,
-      ingestBatch = ingestBatch, dynamic = true)
+    ingestBatch.foreach(b =>
+      require(b >= 1, s"appendTrainingShards: batch 0 is the initial build's"))
+    val (batch, shardBase, _) =
+      basesOf(manifestBase(newDocs.sparkSession, dir, ingestBatch).head(), ingestBatch)
+    writeShardFiles(newDocs, dir, nShards, shardBase, batch, dynamic = true)
+  }
+
+  /** What an append folds past, as ONE aggregate over the stored manifest:
+    * the last batch, the last shard (-1 when none) and the stored entry
+    * count. The explicit forms aggregate rows STRICTLY BEFORE
+    * `ingestBatch`, so a replay of a batch id lands on the same shard and
+    * pack ids and overwrites its own output; the ad-hoc forms (None)
+    * aggregate every row, which makes the next-batch probe and the base
+    * the same manifest pass (guide §1.2). */
+  private def manifestBase(spark: SparkSession, dir: String,
+                           ingestBatch: Option[Long]): DataFrame = {
+    val manifest = spark.read.parquet(s"$dir/manifest")
+    ingestBatch.fold(manifest)(b =>
+      manifest.filter(col("ingest_batch").cast("long") < b))
+      .agg(
+        max(col("ingest_batch").cast("long")).as("_max_batch"),
+        coalesce(max(col("shard").cast("long")), lit(-1L)).as("_max_shard"),
+        coalesce(sum(col("n_docs").cast("long")), lit(0L)).as("_n_stored"))
+  }
+
+  /** (batch, shard base, pack base) from a row carrying [[manifestBase]]'s
+    * columns: the batch is `ingestBatch`, else the stored max + 1 (1 for a
+    * manifest with no rows); every container entry of the packed store is
+    * one pack, so the stored entry count is its pack base. */
+  private def basesOf(row: Row, ingestBatch: Option[Long]): (Long, Long, Long) = {
+    val lastBatch = row.fieldIndex("_max_batch")
+    (ingestBatch.getOrElse(if (row.isNullAt(lastBatch)) 1L else row.getLong(lastBatch) + 1L),
+      row.getLong(row.fieldIndex("_max_shard")) + 1L,
+      row.getLong(row.fieldIndex("_n_stored")))
   }
 
   private def writeShardFiles(docs: DataFrame, dir: String, nShards: Int,
@@ -358,19 +377,13 @@ object TrainingShards {
     * central-directory reader. */
   def readTrainingShards(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    spark.read.format("binaryFile").load(committedShardPaths(spark, dir): _*)
+    committedContainers(spark, dir)
       .select(col("path"), col("content"))
       .as[(String, Array[Byte])]
       .flatMap { case (path, bytes) =>
-        val name = path.substring(path.lastIndexOf('/') + 1)
-        val shard = name.stripPrefix("shard-").stripSuffix(".zip").toLong
-        ShardZip.entries(bytes).iterator.map { e =>
-          val d1 = e.name.indexOf('.')
-          val d2 = e.name.indexOf('.', d1 + 1)
-          val in = ShardZip.entryStream(bytes, e)
-          val text = try new String(in.readAllBytes(), UTF_8) finally in.close()
-          (shard, e.name.substring(0, d1).toLong,
-            e.name.substring(d1 + 1, d2).toLong, text)
+        val shard = shardOf(path)
+        containerEntries(bytes).map { case (_, pos, id, data) =>
+          (shard, pos, id, new String(data, UTF_8))
         }
       }.toDF("shard", "pos", "doc_id", "text")
   }
@@ -387,11 +400,36 @@ object TrainingShards {
     * an uncommitted batch whose files a glob reader would happily decode
     * (review-caught). The collect is manifest-row-bounded driver state —
     * the same scale as the manifest itself. */
-  private def committedShardPaths(spark: SparkSession, dir: String): Seq[String] = {
+  private def committedContainers(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    spark.read.parquet(s"$dir/manifest").select(col("shard"))
-      .as[Long].collect().sorted.toSeq
-      .map(s => s"$dir/${shardFileName(s)}")
+    spark.read.format("binaryFile").load(
+      spark.read.parquet(s"$dir/manifest").select(col("shard"))
+        .as[Long].collect().sorted.toSeq
+        .map(s => s"$dir/${shardFileName(s)}"): _*)
+  }
+
+  /** The shard id of a container file's path. */
+  private def shardOf(path: String): Long =
+    path.substring(path.lastIndexOf('/') + 1)
+      .stripPrefix("shard-").stripSuffix(".zip").toLong
+
+  /** One container's entries in directory order as (name, pos, entry id,
+    * payload) — the walk every container reader shares. */
+  private def containerEntries(bytes: Array[Byte]): Iterator[(String, Long, Long, Array[Byte])] =
+    ShardZip.entries(bytes).iterator.map { e =>
+      val d1 = e.name.indexOf('.')
+      val d2 = e.name.indexOf('.', d1 + 1)
+      val in = ShardZip.entryStream(bytes, e)
+      val data = try in.readAllBytes() finally in.close()
+      (e.name, e.name.substring(0, d1).toLong, e.name.substring(d1 + 1, d2).toLong, data)
+    }
+
+  /** A packed entry's payload as its 4-byte little-endian token ids; an
+    * unaligned payload fails loudly. */
+  private def tokenIds(name: String, data: Array[Byte]): Array[Int] = {
+    require(data.length % 4 == 0, s"packed entry $name: payload not 4-byte aligned")
+    val bb = java.nio.ByteBuffer.wrap(data).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    Array.fill(data.length / 4)(bb.getInt())
   }
 
   // ------------------------------------------- packed token-sequence shards
@@ -456,16 +494,31 @@ object TrainingShards {
     Seq((k, budget, bounds.toSeq)).toDF("k", "budget", "bounds")
       .write.mode("overwrite").parquet(s"$dir/params")
     val plan = packPlanFromCounts(counts, budget, bounds, countsPinned = true)
-    // spans before containers before manifest: the manifest stays the
-    // commit marker, and readers gate the spans part on committed batches
-    ArtifactCompaction.writeBatch(plan.spans, s"$dir/spans", 0L,
-      dynamic = false)
-    def entries = withLayout(packPayloadsFromDocArrays(
-        BpeTrainer.docTokenArrays(docs, wordSyms, vocab), plan, budget)
+    writePackedBatch(BpeTrainer.docTokenArrays(docs, wordSyms, vocab), plan,
+      budget, dir, nShards, shardBase = 0L, packBase = 0L, ingestBatch = 0L)
+  }
+
+  /** One batch of the packed store: the spans, then containers of the
+    * packs assembled from `docArrs` under `plan` — spans before containers
+    * before manifest, so the manifest stays the commit marker and readers
+    * gate the spans part on committed batches. `packBase` shifts an
+    * increment's pack ids past every stored batch's (a uniform shift, so
+    * adding it after payload assembly groups the identical pack
+    * contents); the build and the rebuild pass 0 and get no shift
+    * projection. Batch 0 resets its parts, later batches overwrite only
+    * their own partition. */
+  private def writePackedBatch(docArrs: DataFrame, plan: PackPlan, budget: Int,
+                               dir: String, nShards: Int, shardBase: Long,
+                               packBase: Long, ingestBatch: Long): Unit = {
+    def shifted(df: DataFrame) =
+      if (packBase == 0L) df else df.withColumn("pack_seq", col("pack_seq") + packBase)
+    val dynamic = ingestBatch > 0L
+    ArtifactCompaction.writeBatch(shifted(plan.spans), s"$dir/spans", ingestBatch, dynamic)
+    def entries = withLayout(shifted(packPayloadsFromDocArrays(docArrs, plan, budget))
       .select(col("pack_seq").as("entry_id"), col("payload")),
-      nShards, shardBase = 0L)
-    writeContainerFiles(spark, () => entries, dir, nShards, shardBase = 0L,
-      ingestBatch = 0L, dynamic = false, ext = "bin", reset = false)
+      nShards, shardBase)
+    writeContainerFiles(docArrs.sparkSession, () => entries, dir, nShards, shardBase,
+      ingestBatch, dynamic, ext = "bin", reset = false)
   }
 
   /** Fold a corpus increment into the packed store as NEW containers of
@@ -516,23 +569,13 @@ object TrainingShards {
     // balance difference, never a compatibility break — review-caught:
     // a hard fieldIndex would make every pre-upgrade store unappendable)
     val hasBounds = prm.schema.fieldNames.contains("bounds")
-    val manifest = spark.read.parquet(s"$dir/manifest")
-    val scoped = ingestBatch.fold(manifest)(b =>
-      manifest.filter(col("ingest_batch").cast("long") < b))
     val row = prm
       .select(col("budget") +:
         (if (hasBounds) Seq(col("bounds")) else Nil): _*)
-      .crossJoin(scoped.agg(
-        max(col("ingest_batch").cast("long")).as("_max_batch"),
-        coalesce(max(col("shard").cast("long")), lit(-1L)).as("_max_shard"),
-        coalesce(sum(col("n_docs").cast("long")), lit(0L)).as("_n_stored")))
+      .crossJoin(manifestBase(spark, dir, ingestBatch))
       .head()
-    AppendMeta(
-      ingestBatch = ingestBatch.getOrElse(
-        if (row.isNullAt(row.fieldIndex("_max_batch"))) 1L
-        else row.getLong(row.fieldIndex("_max_batch")) + 1L),
-      shardBase = row.getLong(row.fieldIndex("_max_shard")) + 1L,
-      packBase = row.getLong(row.fieldIndex("_n_stored")), // every container entry is one pack
+    val (batch, shardBase, packBase) = basesOf(row, ingestBatch)
+    AppendMeta(batch, shardBase, packBase,
       budget = row.getAs[Int]("budget"),
       bounds = if (hasBounds)
         Some(row.getSeq[Long](row.fieldIndex("bounds")).toArray) else None)
@@ -546,8 +589,6 @@ object TrainingShards {
     val spark = newDocs.sparkSession
     import org.apache.spark.sql.expressions.Window
     val budget = meta.budget
-    val shardBase = meta.shardBase
-    val packBase = meta.packBase
     val merges = BpeTrainer.loadMerges(spark, s"$dir/tokenizer/merges")
     // empty-seed bootstrap (ArtifactCompaction.readOptional): a store
     // built from zero/wordless docs writes a ZERO-ROW vocab, which leaves
@@ -584,18 +625,8 @@ object TrainingShards {
         graft.operators.PrefixSum.defaultBuckets(newDocs)))
     val plan = packPlanFromCounts(
       BpeTrainer.docTokenCountsFrom(newDocs, wordSyms), budget, bounds)
-    ArtifactCompaction.writeBatch(
-      plan.spans.withColumn("pack_seq", col("pack_seq") + packBase),
-      s"$dir/spans", ingestBatch, dynamic = true)
-    // the global batch base shifts every pack id uniformly, so adding it
-    // after payload assembly groups the identical pack contents
-    def entries = withLayout(packPayloadsFromDocArrays(
-        BpeTrainer.docTokenArrays(newDocs, wordSyms, vocab), plan, budget)
-      .withColumn("pack_seq", col("pack_seq") + packBase)
-      .select(col("pack_seq").as("entry_id"), col("payload")),
-      nShards, shardBase)
-    writeContainerFiles(spark, () => entries, dir, nShards, shardBase,
-      ingestBatch, dynamic = true, ext = "bin", reset = false)
+    writePackedBatch(BpeTrainer.docTokenArrays(newDocs, wordSyms, vocab), plan,
+      budget, dir, nShards, meta.shardBase, meta.packBase, ingestBatch)
   }
 
   /** (pack_seq, pack_pos, token_id) — the pack layout over the tokenized
@@ -793,25 +824,14 @@ object TrainingShards {
     * sequence (its `string_agg` twin), not just a count. */
   def readPackedTokenShards(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    spark.read.format("binaryFile").load(committedShardPaths(spark, dir): _*)
+    committedContainers(spark, dir)
       .select(col("path"), col("content"))
       .as[(String, Array[Byte])]
       .flatMap { case (path, bytes) =>
-        val name = path.substring(path.lastIndexOf('/') + 1)
-        val shard = name.stripPrefix("shard-").stripSuffix(".zip").toLong
-        ShardZip.entries(bytes).iterator.map { e =>
-          val d1 = e.name.indexOf('.')
-          val d2 = e.name.indexOf('.', d1 + 1)
-          val in = ShardZip.entryStream(bytes, e)
-          val data = try in.readAllBytes() finally in.close()
-          require(data.length % 4 == 0,
-            s"packed entry ${e.name}: payload not 4-byte aligned")
-          val bb = java.nio.ByteBuffer.wrap(data)
-            .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-          val csv = Iterator.continually(bb)
-            .take(data.length / 4).map(_.getInt().toString).mkString(",")
-          (shard, e.name.substring(0, d1).toLong,
-            e.name.substring(d1 + 1, d2).toLong, (data.length / 4).toLong, csv)
+        val shard = shardOf(path)
+        containerEntries(bytes).map { case (name, pos, id, data) =>
+          val tok = tokenIds(name, data)
+          (shard, pos, id, tok.length.toLong, tok.mkString(","))
         }
       }.toDF("shard", "pos", "pack_seq", "n_tokens", "token_csv")
   }
@@ -1251,24 +1271,11 @@ object TrainingShards {
     * source (committed containers only, the manifest gate). */
   private def packedTokenArrays(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    spark.read.format("binaryFile").load(committedShardPaths(spark, dir): _*)
+    committedContainers(spark, dir)
       .select(col("content")).as[Array[Byte]]
-      .flatMap { bytes =>
-        ShardZip.entries(bytes).iterator.map { e =>
-          val d1 = e.name.indexOf('.')
-          val d2 = e.name.indexOf('.', d1 + 1)
-          val in = ShardZip.entryStream(bytes, e)
-          val data = try in.readAllBytes() finally in.close()
-          require(data.length % 4 == 0,
-            s"packed entry ${e.name}: payload not 4-byte aligned")
-          val bb = java.nio.ByteBuffer.wrap(data)
-            .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-          val arr = Array.ofDim[Int](data.length / 4)
-          var i = 0
-          while (i < arr.length) { arr(i) = bb.getInt(); i += 1 }
-          (e.name.substring(d1 + 1, d2).toLong, arr)
-        }
-      }.toDF("pack_seq", "tok")
+      .flatMap(bytes => containerEntries(bytes).map { case (name, _, id, data) =>
+        (id, tokenIds(name, data))
+      }).toDF("pack_seq", "tok")
   }
 
   /** HARD-DELETE REBUILD of the packed store — the corpus-sized decision
@@ -1428,14 +1435,8 @@ object TrainingShards {
     // spans partition its token run, so Σ span n_tokens = the doc's token
     // count; the counts checkpoint never pays the container-decode + slice
     // chain, and the decode runs exactly once, in the container write)
-    ArtifactCompaction.writeBatch(plan.spans, s"$dir/_rebuild/spans", 0L,
-      dynamic = false)
-    def entries = withLayout(packPayloadsFromDocArrays(docArrs, plan, budget)
-      .select(col("pack_seq").as("entry_id"), col("payload")),
-      nShards, shardBase = 0L)
-    writeContainerFiles(spark, () => entries, s"$dir/_rebuild", nShards,
-      shardBase = 0L, ingestBatch = 0L, dynamic = false, ext = "bin",
-      reset = false)
+    writePackedBatch(docArrs, plan, budget, s"$dir/_rebuild", nShards,
+      shardBase = 0L, packBase = 0L, ingestBatch = 0L)
     // ---- commit: plan marker, then the idempotent swap
     val auditId: Long = {
       val a = new Path(base, "audit")

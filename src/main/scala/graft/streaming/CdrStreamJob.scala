@@ -92,13 +92,6 @@ object CdrStreamJob {
       .trigger(Trigger.ProcessingTime(triggerMs))
       .start()
 
-  /** K2: labeled console sink (EnrichmentApp.java:97-103). */
-  def consoleSink(df: DataFrame, checkpoint: String): StreamingQuery =
-    df.writeStream.format("console")
-      .option("truncate", value = false)
-      .option("checkpointLocation", checkpoint)
-      .start()
-
   /** K3: Kafka CSV sink for the generator job (Generator.java:51-64).
     * At-least-once (Structured Streaming's Kafka sink has no transactional
     * exactly-once; the reference disables idempotence too, :60). */
@@ -122,11 +115,14 @@ object CdrStreamJob {
     * taken here — a `DimIndex` built once from these static frames (the
     * join shape when they are over the broadcast size rule), so later
     * changes to the tables behind them reach this query only through a
-    * new `enrichedStream` — then stateful session dedup (A1/A2),
-    * sink-schema union (P7/K4). */
+    * new `enrichedStream` — then stateful session dedup (A1/A2), whose
+    * winner's `event_date` and `probe` are derived after it, as
+    * `dedupLatestAgg` derives them from its own winner, and sink-schema
+    * union (P7/K4). */
   def enrichedStream(src: DataFrame, imsiMsisdn: DataFrame,
                      msIpExploded: DataFrame, gapMs: Long = 1000L): DataFrame =
-    CdrPipeline.twoBranch(src, imsiMsisdn, msIpExploded)(SessionDedup(_, gapMs).toDF())
+    CdrPipeline.twoBranch(src, imsiMsisdn, msIpExploded)(unknown =>
+      CdrPipeline.extendWithPartitionCols(SessionDedup(unknown, gapMs).toDF()))
 
   /** Production micro-batch runner: the whole batch pipeline per trigger,
     * dimensions from TTL caches (60 s — flink.conf:38,48), idempotent write
@@ -216,7 +212,13 @@ object CdrStreamJob {
     * `event_date`/`probe` pruning is unchanged; readers of the table see one
     * extra partition column (documented layout delta vs flink.conf:56).
     * The corpus and media ingests pass their own `partCols` and `format`;
-    * `maxRecordsPerFile <= 0` leaves the file-size cap unset. */
+    * `maxRecordsPerFile <= 0` leaves the file-size cap unset.
+    *
+    * Read contract: a schema-less `spark.read.parquet` infers partition
+    * types from the directory names, so `event_date` comes back a DATE and
+    * `batch_id` an INT, while the sink declares `event_date` a STRING. Pass
+    * the sink schema plus `batch_id` LONG, or set
+    * `spark.sql.sources.partitionColumnTypeInference.enabled=false`. */
   def writeBatch(out: DataFrame, batchId: Long, path: String,
                  maxRecordsPerFile: Long = 1000000L,
                  partCols: Seq[String] = Seq("event_date", "probe"),

@@ -39,11 +39,11 @@ final class DimensionCache(load: () => DataFrame, ttlMs: Long) {
         val fresh = load()
         fresh.cache()
         // eager materialization: one count per TTL window pins the snapshot
-        // AND gives the cached relation ACCURATE size stats immediately, so
-        // CdrPipeline's size-conditional broadcast hint sees the real dim
-        // size from the first micro-batch (a lazily-cached JDBC relation
-        // reports unknown/Long.Max until first use and would lose the
-        // broadcast for exactly one batch)
+        // AND gives the cached relation ACCURATE size stats immediately. A
+        // lazily-cached JDBC relation reports an unknown size until first
+        // use, and the size rule lets an unknown size through, so without
+        // the count a dim over the rule would reach DimIndex.build's
+        // driver-side collect; with it, such a dim keeps the join shape
         // a refresh-time failure (transient JDBC outage) must not leak the
         // just-registered cache entry: unpersist before propagating, and the
         // held (stale but materialized) snapshot stays in place

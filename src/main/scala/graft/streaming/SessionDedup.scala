@@ -5,9 +5,12 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** One enriched CDR row out of the J3/J4 range join, pre-dedup.
-  * Mirrors the column flow at EnrichmentApp.java:320-340: sink columns plus
-  * the exploded `ip` and the dimension `_start_time` the argmax keys on. */
+/** One enriched CDR row out of the J3/J4 range join, pre-dedup: what the
+  * argmax and the sink read of the column flow at EnrichmentApp.java:320-340
+  * — the sink columns the partition columns derive from, plus the dimension
+  * `_start_time` the argmax keys on. The exploded `ip` and the partition
+  * columns stay out of the state row; the caller derives `event_date` and
+  * `probe` from the winner. */
 case class EnrichedCdr(
     start_time: Timestamp,
     measuring_probe_name: String,
@@ -15,9 +18,6 @@ case class EnrichedCdr(
     msisdn: Option[Long],
     ms_ip_address: String,
     unique_cdr_id: Long,
-    event_date: String,
-    probe: String,
-    ip: Option[String],
     _start_time: Option[Timestamp])
 
 /** A2 + A1, streaming form: per-`unique_cdr_id` whole-row argmax by dimension
@@ -71,7 +71,7 @@ object SessionDedup {
     import spark.implicits._
     joined.selectExpr(
         "start_time", "measuring_probe_name", "imsi", "msisdn",
-        "ms_ip_address", "unique_cdr_id", "event_date", "probe", "ip", "_start_time")
+        "ms_ip_address", "unique_cdr_id", "_start_time")
       .as[EnrichedCdr]
       .groupByKey(_.unique_cdr_id)
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.ProcessingTimeTimeout)(

@@ -95,4 +95,52 @@ object PipelineProps extends Properties("cdr") {
       val violations = joined.filter(col("_start_time") > col("start_time")).count()
       perKey == 0L && violations == 0L
     }
+
+  // ---- dimension index vs joins on dims drawn from the batch itself
+
+  private type Session = (Option[Timestamp], Option[Long], Option[Long], String, String)
+
+  private def minute(i: Int) = new Timestamp(1705305600000L + i * 60000L)
+
+  /** A batch over few probes, ips, imsis and start minutes, and dims drawn
+    * from it: `imsi_msisdn` rows keyed by the batch's own imsis (duplicate
+    * keys, NULL keys, NULL msisdns), `ms_ip_exploded` sessions on the
+    * batch's own (probe, ip) pairs starting on the batch's minutes — so
+    * sessions start exactly at CDR start times — each session one to three
+    * tied rows whose imsi and msisdn are each NULL or not. */
+  private val genIndexCase = for {
+    cdrs <- Gen.listOfN(12, for {
+      t <- Gen.choose(1, 5).map(minute)
+      probe <- Gen.oneOf("vi_probe", "sp_probe")
+      imsi <- Gen.option(Gen.choose(1L, 4L))
+      msisdn <- Gen.option(Gen.choose(900L, 903L))
+      ips <- Gen.listOfN(2, Gen.oneOf("10.0.0.1", "10.0.0.2", "10.0.0.3"))
+      id <- Gen.choose(1L, 8L)
+    } yield (t, probe, imsi, msisdn, ips.mkString(";", ";", ";"), id))
+    imsiDim <- Gen.listOfN(6, Gen.zip(
+      Gen.oneOf(None +: cdrs.flatMap(_._3).map(Some(_))),
+      Gen.option(Gen.choose(700L, 702L))))
+    pairs = cdrs.flatMap(c => c._5.split(";").filter(_.nonEmpty).map(ip => (c._2.take(2), ip))).distinct
+    sessions <- Gen.listOfN(6, for {
+      key <- Gen.oneOf(pairs)
+      start <- Gen.frequency(9 -> Gen.choose(0, 6).map(i => Some(minute(i))), 1 -> Gen.const(None))
+      ties <- Gen.choose(1, 3)
+      rows <- Gen.listOfN(ties, Gen.zip(Gen.option(Gen.choose(200L, 202L)), Gen.option(Gen.choose(300L, 302L))))
+    } yield rows.map { case (imsi, msisdn) => (start, imsi, msisdn, key._1, key._2): Session })
+  } yield (cdrs, imsiDim, sessions.flatten)
+
+  property("dimension index: full == join shape as a multiset on dims drawn from the batch") =
+    Prop.forAll(genIndexCase) { case (cdrs, imsiRows, sessionRows) =>
+      val src = df(cdrs)
+      val imsi = imsiRows.toDF("imsi", "msisdn")
+      val msIp = sessionRows.toDF("start_time", "imsi", "msisdn", "probe", "ip")
+      val viaIndex = CdrPipeline.full(src, imsi, msIp)
+      val ext = CdrPipeline.extendWithPartitionCols(src)
+      val viaJoins = CdrPipeline.knownBranch(ext, imsi, "left_outer").unionByName(
+        CdrPipeline.projectToSink(CdrPipeline.dedupLatestAgg(CdrPipeline.unknownJoin(ext, msIp))))
+      val indexed = viaIndex.queryExecution.optimizedPlan.collect {
+        case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+      }.isEmpty
+      indexed && viaIndex.exceptAll(viaJoins).isEmpty && viaJoins.exceptAll(viaIndex).isEmpty
+    }
 }

@@ -8,7 +8,7 @@ import graft.cdr.{CdrPipeline, CdrTables}
 import graft.streaming.{CdrStreamJob, CsvCodec, DimensionCache, SessionDedup}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StringType}
 
 /** Streaming e2e per SURVEY §5.3: MemoryStream → pipeline → memory/file sink,
   * asserting the streaming plans produce exactly what the batch (oracle-
@@ -150,6 +150,19 @@ class StreamingSpec extends SparkSpec {
     assert(back.schema("batch_id").dataType == LongType)
     assert(back.select("batch_id").distinct().as[Long].collect().sorted.toSeq == Seq(7L, 8L))
     assert(back.count() == 2 * full.count())
+    // event_date is the sink contract's STRING under either documented read;
+    // a schema-less read with type inference on would make it a DATE
+    def dates(df: org.apache.spark.sql.DataFrame) =
+      df.select("event_date").distinct().as[String].collect().sorted.toSeq
+    assert(back.schema("event_date").dataType == StringType)
+    assert(dates(back) == dates(full))
+    val inference = "spark.sql.sources.partitionColumnTypeInference.enabled"
+    spark.conf.set(inference, "false")
+    try {
+      val raw = spark.read.parquet(out)
+      assert(raw.schema("event_date").dataType == StringType)
+      assert(dates(raw) == dates(full))
+    } finally spark.conf.unset(inference)
   }
 
   test("K1 idempotency: a replayed micro-batch rewrites its output instead of appending") {
@@ -238,7 +251,7 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.EnrichedCdr
     def row(stime: String, dim: String): EnrichedCdr = EnrichedCdr(
       Timestamp.valueOf(stime), "vi_probe", Some(900L), Some(111L), "10.0.0.1",
-      77L, "2024-01-15", "vi", Some("10.0.0.1"), Some(Timestamp.valueOf(dim)))
+      77L, Some(Timestamp.valueOf(dim)))
     val mem = MemoryStream[EnrichedCdr](spark)
     // both bursts queued BEFORE the query starts ⇒ guaranteed same batch 0,
     // the exact shape a gap-length stall under a slow micro-batch produces
